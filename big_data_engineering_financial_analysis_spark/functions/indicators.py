@@ -1,4 +1,4 @@
-"""Technical-indicator kernel — the computational core of the reference.
+"""Batch technical-indicator enrichment — the computational core of the reference.
 
 The reference computes these in driver-side pandas inside ``foreachBatch``
 (services/stream-processing/app/consumer.py:107-155): per symbol, ordered by
@@ -17,165 +17,32 @@ event time, it derives
                SELL if SMA5 < EMA10 and RSI > 30
                else HOLD;  any-NaN -> HOLD             (consumer.py:143-152)
 
-This module re-expresses the exact same math as native Spark window
-expressions partitioned by symbol — so it parallelizes across symbols and
-stays inside whole-stage codegen — instead of collecting every batch to one
-pandas process.  Two deliberate fidelity points:
+Here the same math is the per-symbol recursion ``streaming.state.step``,
+the kernel the streaming pipeline already runs: :func:`enrich` groups the
+candles by symbol and runs it over each key's time-sorted rows from an
+empty state, in an Arrow-batched ``applyInPandas`` stage.  That is O(rows)
+per symbol, parallel across symbols, and bit-identical to the stream by
+construction.  The DuckDB ``ENRICHED_CTE`` oracle (plans/registry.py)
+spells the same math as window expressions; the fidelity points it and
+the kernel share with the reference:
 
-* **min_periods gating.**  pandas ``rolling(n)`` returns NaN until the
-  window holds ``n`` non-NaN values; Spark's windowed ``avg`` happily
-  averages a short frame.  Every rolling mean is therefore gated with
-  ``count(<source col>) OVER (same frame) >= n``.
-* **NULL-propagating clip.**  pandas ``clip`` keeps NaN; Spark's
-  ``greatest``/``least`` *skip* nulls, so the clip is guarded with
-  ``delta IS NOT NULL``.
-
-EMA is the one operator with a recursive dependency (not expressible as a
-frame aggregate).  Batch implementation: a higher-order-function left fold
-over ``collect_list`` — pure Catalyst, no Python.  Cost is O(history²) per
-symbol within one task, which is the right trade for bounded per-key history
-(a year of 1-minute candles is 525k rows).  For unbounded/huge per-key
-history use :func:`enrich_pandas` (O(history) vectorized pandas per key) or
-the incremental keyed-state version in ``streaming/pipeline.py`` (O(batch)).
+* **min_periods gating.**  Every rolling mean is NULL until its window is
+  full (pandas ``rolling(n)``), the EMA until ``EMA_SPAN`` rows.
+* **NULL-propagating clip.**  pandas ``clip`` keeps NaN; the first row's
+  delta, gain and loss are NULL.
+* **Zero divisor.**  ``avg_loss_10 == 0`` gives a NULL ``rs`` and RSI, not
+  100 (the reference's ``.replace({0: None})``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-#: pandas ewm(span=10) smoothing factor: alpha = 2 / (span + 1).
-EMA_SPAN = 10
-SMA_WINDOW = 5
-RSI_WINDOW = 10
-
-BUY, SELL, HOLD = "BUY", "SELL", "HOLD"
-
-
-def _ema_fold(close: Column, alpha: float) -> Column:
-    """EMA via aggregate() HOF over the full per-key history prefix.
-
-    Seeded with the first observation, then
-    ``ema = prev * (1 - alpha) + x * alpha`` — identical recursion (and
-    identical floating-point evaluation order) to pandas
-    ``ewm(adjust=False)`` and to the DuckDB ``list_reduce`` oracle.
-    """
-    beta = 1.0 - alpha
-    return F.aggregate(
-        close,
-        F.lit(None).cast("double"),
-        lambda acc, x: F.when(acc.isNull(), x).otherwise(acc * F.lit(beta) + x * F.lit(alpha)),
-    )
-
-
-def with_indicators(
-    df: DataFrame,
-    symbol_col: str = "stock_symbol",
-    time_col: str = "local_time",
-    close_col: str = "close",
-    sma_window: int = SMA_WINDOW,
-    rsi_window: int = RSI_WINDOW,
-    ema_span: int = EMA_SPAN,
-) -> DataFrame:
-    """Append sma/ema/delta/gain/loss/avg_gain/avg_loss/rs/rsi columns.
-
-    One shuffle total: everything shares the same
-    ``PARTITION BY symbol ORDER BY time`` window, so Catalyst plans a single
-    Exchange + Sort and evaluates all frames in one WindowExec pass over it.
-    Scale note: parallelism = number of symbols; a single pathologically hot
-    symbol should go through ``enrich_pandas``/streaming state instead.
-    """
-    from big_data_engineering_financial_analysis_spark.operators.partitioning import spread_by
-
-    # Pin the window exchange's parallelism on small inputs (see
-    # spread_by): AQE would coalesce the few-MB candle shuffle to one
-    # partition and serialize the per-key EMA fold — the kernel's
-    # dominant cost.  Value-neutral: rows only move between partitions,
-    # and every per-key computation below is a deterministic function of
-    # the key's ordered rows.
-    df = spread_by(df, symbol_col)
-    w = Window.partitionBy(symbol_col).orderBy(time_col)
-    frame_sma = w.rowsBetween(-(sma_window - 1), 0)
-    frame_rsi = w.rowsBetween(-(rsi_window - 1), 0)
-    hist = w.rowsBetween(Window.unboundedPreceding, 0)
-    close = F.col(close_col)
-    alpha = 2.0 / (ema_span + 1.0)
-
-    # output names track the window sizes so non-default parameters cannot
-    # silently produce mislabeled columns (defaults keep the sma_5/... names)
-    sma_col, ema_col = f"sma_{sma_window}", f"ema_{ema_span}"
-    avg_gain_col, avg_loss_col = f"avg_gain_{rsi_window}", f"avg_loss_{rsi_window}"
-    rsi_col = f"rsi_{rsi_window}"
-
-    delta = close - F.lag(close, 1).over(w)
-
-    df = (
-        df.withColumn(
-            sma_col,
-            F.when(
-                F.count(close_col).over(frame_sma) >= sma_window,
-                F.avg(close_col).over(frame_sma),
-            ),
-        )
-        .withColumn(
-            ema_col,
-            F.when(
-                F.count(close_col).over(hist) >= ema_span,
-                _ema_fold(F.collect_list(close_col).over(hist), alpha),
-            ),
-        )
-        .withColumn("delta", delta)
-        # pandas clip keeps NaN; Spark greatest/least skip NULLs -> guard.
-        # "+ 0.0" folds IEEE -0.0 to +0.0 (-least(0.0, ...) negates zero) so
-        # every engine path and the DuckDB oracle agree bit-for-bit.
-        .withColumn(
-            "gain",
-            F.when(F.col("delta").isNotNull(), F.greatest(F.col("delta"), F.lit(0.0)) + F.lit(0.0)),
-        )
-        .withColumn(
-            "loss",
-            F.when(F.col("delta").isNotNull(), -F.least(F.col("delta"), F.lit(0.0)) + F.lit(0.0)),
-        )
-    )
-    # rolling(10).mean() with min_periods=10 counts non-NaN inputs; gain/loss
-    # are NaN exactly where delta is, so gate on count(delta) over the frame.
-    gate = F.count("delta").over(frame_rsi) >= rsi_window
-    df = (
-        df.withColumn(avg_gain_col, F.when(gate, F.avg("gain").over(frame_rsi)))
-        .withColumn(avg_loss_col, F.when(gate, F.avg("loss").over(frame_rsi)))
-        # divisor 0 -> NULL (reference .replace({0: None}), consumer.py:123);
-        # NULL divisor falls through to otherwise() and propagates NULL.
-        .withColumn(
-            "rs",
-            F.when(F.col(avg_loss_col) == 0, F.lit(None).cast("double")).otherwise(
-                F.col(avg_gain_col) / F.col(avg_loss_col)
-            ),
-        )
-        # rs NULL (zero-loss streak) -> RSI NULL, NOT 100 — reference parity.
-        .withColumn(rsi_col, F.lit(100.0) - F.lit(100.0) / (F.lit(1.0) + F.col("rs")))
-    )
-    return df
-
-
-def with_signal(
-    df: DataFrame,
-    sma_col: str = "sma_5",
-    ema_col: str = "ema_10",
-    rsi_col: str = "rsi_10",
-) -> DataFrame:
-    """BUY/SELL/HOLD rule as a codegen'd CASE expression (no UDF).
-
-    Reference rule at consumer.py:147-152 with the any-NaN guard at
-    consumer.py:143-145 (NaN in SMA/EMA/RSI -> HOLD).
-    """
-    sma, ema, rsi = F.col(sma_col), F.col(ema_col), F.col(rsi_col)
-    return df.withColumn(
-        "signal",
-        F.when(sma.isNull() | ema.isNull() | rsi.isNull(), HOLD)
-        .when((sma > ema) & (rsi < 70), BUY)
-        .when((sma < ema) & (rsi > 30), SELL)
-        .otherwise(HOLD),
-    )
+from big_data_engineering_financial_analysis_spark.operators.partitioning import spread_by
+from big_data_engineering_financial_analysis_spark.streaming.state import (
+    enrich_group,
+    enriched_ddl,
+)
 
 
 def enrich(
@@ -184,110 +51,37 @@ def enrich(
     time_col: str = "local_time",
     close_col: str = "close",
 ) -> DataFrame:
-    """Full enrichment: candle rows in, 17-column enriched rows out."""
-    return with_signal(
-        with_indicators(df, symbol_col=symbol_col, time_col=time_col, close_col=close_col)
-    )
+    """Full enrichment: candle rows in, the input columns plus sma_5,
+    ema_10, delta, gain, loss, avg_gain_10, avg_loss_10, rs, rsi_10 and
+    signal out.
 
-
-#: Per-key history length where the O(n²) HOF fold loses to the O(n)
-#: Arrow/pandas path.  Measured on local[32] (see PERF.md §EMA): roughly
-#: even at 1k rows/key (the fold avoids the Python worker round-trip),
-#: pandas 3x faster at 2k, 44x at 16k (fold 37.9s vs 0.85s), and the fold
-#: is quadratically unrunnable at 100k.
-EMA_FOLD_ROW_LIMIT = 1000
-
-
-def enrich_auto(
-    df: DataFrame,
-    symbol_col: str = "stock_symbol",
-    time_col: str = "local_time",
-    close_col: str = "close",
-    fold_limit: int = EMA_FOLD_ROW_LIMIT,
-) -> DataFrame:
-    """Enrichment with automatic EMA-path selection — the default entry.
-
-    The batch window kernel's EMA fold re-reduces the whole per-key prefix
-    per row: O(history²) per symbol.  Fine for bounded histories (it stays
-    JVM-side, no Arrow hop), quadratic death on long ones.  This probes the
-    longest per-key history with one cheap count aggregate (map-side
-    partial combine on the symbol key — at 100 TB this is a metadata-sized
-    shuffle of one long per symbol) and routes:
-
-    * longest history <= ``fold_limit`` → :func:`enrich` (pure-Catalyst fold)
-    * beyond → :func:`enrich_pandas` (O(n) vectorized pandas per key)
-
-    Both paths are bit-identical (same recursion, same FP order — each is
-    independently oracle-checked), so the switch never changes results,
-    only the physical plan.
-
-    The probe is the shared :func:`..indicators_ext.longest_history`
-    (r13): scan-shaped bounded frames resolve it EXACTLY from parquet
-    footers driver-side (zero Spark jobs — the r12 verdict priced the
-    probe job at ~0.12 s per construction); everything else runs the
-    original count aggregate.
+    One output row per input row.  Rows of one symbol with the same time
+    are all enriched, in stable time order.  A row with a NULL or NaN
+    close comes out with NULL indicators and ``HOLD`` and does not advance
+    the recursion: the next row's delta and EMA continue from the last
+    usable close.  The window/fold kernel this replaced did not skip such
+    a row: its frames counted it, so SMA, delta and RSI went NULL for the
+    next 4, 1 and 10 rows; a NULL close kept the EMA of the rows before
+    it, and a NaN close turned the EMA NaN for the rest of the series.
+    See ``streaming/state.py``.
     """
-    from big_data_engineering_financial_analysis_spark.functions.indicators_ext import (
-        longest_history,
-    )
+    schema = enriched_ddl(df.schema)
 
-    longest = longest_history(df, symbol_col, fold_limit)
-    if longest is not None and longest > fold_limit:
-        out = enrich_pandas(df, symbol_col, time_col, close_col)
-        # align column order with the window path (selects downstream are
-        # order-independent, but unionByName-free callers deserve parity)
-        return out
-    return enrich(df, symbol_col=symbol_col, time_col=time_col, close_col=close_col)
+    def run(pdf):
+        return enrich_group(pdf, time_col, close_col)
+
+    # Pin the stage's parallelism on small inputs (see spread_by): AQE
+    # would coalesce the few-MB candle shuffle to one partition and
+    # serialize the per-key Python loop.  Value-neutral: rows only move
+    # between partitions, and each key's output depends on its rows only.
+    return spread_by(df, symbol_col).groupBy(symbol_col).applyInPandas(run, schema=schema)
 
 
-def enrich_pandas(
+def with_indicators(
     df: DataFrame,
     symbol_col: str = "stock_symbol",
     time_col: str = "local_time",
     close_col: str = "close",
 ) -> DataFrame:
-    """Same enrichment via per-key ``applyInPandas`` (Arrow-batched).
-
-    O(history) per key instead of the HOF fold's O(history²) — the scale
-    path for very long per-key series.  The group function is literally the
-    reference's pandas recipe, so this doubles as a living parity oracle.
-    """
-    import pandas as pd  # noqa: F401  (worker-side import)
-
-    from big_data_engineering_financial_analysis_spark.streaming.state import enriched_ddl_suffix
-
-    out_fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema = f"{out_fields}, {enriched_ddl_suffix()}"
-
-    from big_data_engineering_financial_analysis_spark.operators.partitioning import spread_by
-
-    # same rationale as with_indicators: keep the Arrow/Python stage's
-    # parallelism pinned on small inputs instead of AQE-coalesced to one
-    # worker (the groupBy reuses the keyed partitioning — no extra
-    # Exchange)
-    df = spread_by(df, symbol_col)
-
-    def compute(pdf):
-        pdf = pdf.sort_values(time_col, kind="stable").reset_index(drop=True)
-        close = pdf[close_col]
-        pdf["sma_5"] = close.rolling(window=SMA_WINDOW).mean()
-        pdf["ema_10"] = close.ewm(span=EMA_SPAN, adjust=False, min_periods=EMA_SPAN).mean()
-        pdf["delta"] = close.diff()
-        # "+ 0.0" folds IEEE -0.0 (from negating the clip) to +0.0 — parity
-        # with the window-expression path and the DuckDB oracle.
-        pdf["gain"] = pdf["delta"].clip(lower=0) + 0.0
-        pdf["loss"] = -pdf["delta"].clip(upper=0) + 0.0
-        pdf["avg_gain_10"] = pdf["gain"].rolling(window=RSI_WINDOW).mean()
-        pdf["avg_loss_10"] = pdf["loss"].rolling(window=RSI_WINDOW).mean()
-        pdf["rs"] = pdf["avg_gain_10"] / pdf["avg_loss_10"].replace({0: None})
-        pdf["rsi_10"] = 100 - (100 / (1 + pdf["rs"]))
-
-        import numpy as np
-
-        cond_nan = pdf[["sma_5", "ema_10", "rsi_10"]].isna().any(axis=1)
-        buy = (pdf["sma_5"] > pdf["ema_10"]) & (pdf["rsi_10"] < 70)
-        sell = (pdf["sma_5"] < pdf["ema_10"]) & (pdf["rsi_10"] > 30)
-        pdf["signal"] = np.select([cond_nan, buy, sell], [HOLD, BUY, SELL], default=HOLD)
-        return pdf
-
-    return df.groupBy(symbol_col).applyInPandas(compute, schema=out_schema)
+    """:func:`enrich` without the ``signal`` column."""
+    return enrich(df, symbol_col=symbol_col, time_col=time_col, close_col=close_col).drop("signal")

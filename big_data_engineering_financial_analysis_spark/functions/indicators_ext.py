@@ -3,16 +3,17 @@
 The reference's pipeline computes SMA/EMA/RSI/signal
 (services/stream-processing/app/consumer.py:107-155).  A user of a
 financial-analysis engine expects the rest of the standard toolkit; this
-module adds the canonical ones, expressed with the same design rules as
-``functions/indicators.py``:
+module adds the canonical ones as Catalyst window expressions (the
+pipeline's own SMA/EMA/RSI run through the per-key recursion of
+``streaming/state.py`` instead):
 
 * one ``PARTITION BY symbol ORDER BY time, id`` window family — a single
   Exchange; every frame aggregate rides the same sort, so Catalyst plans
   one WindowExec pass per frame group and parallelism = #symbols;
 * min_periods gating via ``count(...) OVER (same frame) >= n`` (pandas
   ``rolling(n)`` semantics — NULL until the window is full);
-* EMA recursions via the same ``aggregate()`` HOF fold as ``ema_10``
-  (identical FP evaluation order to pandas ``ewm(adjust=False)`` and the
+* EMA recursions via an ``aggregate()`` HOF fold (:func:`_ema_fold`;
+  identical FP evaluation order to pandas ``ewm(adjust=False)`` and the
   DuckDB ``list_reduce`` oracle);
 * everything stays JVM-side in whole-stage-codegen-able expressions —
   no Python in the data path.
@@ -40,10 +41,26 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from big_data_engineering_financial_analysis_spark.functions.indicators import _ema_fold
 from big_data_engineering_financial_analysis_spark.operators.partitioning import spread_by
 
 TRADING_DAYS = 252
+
+
+def _ema_fold(values: Column, alpha: float) -> Column:
+    """EMA via aggregate() HOF over the full per-key history prefix.
+
+    Seeded with the first observation, then
+    ``ema = prev * (1 - alpha) + x * alpha`` — identical recursion (and
+    identical floating-point evaluation order) to pandas
+    ``ewm(adjust=False)`` and to the DuckDB ``list_reduce`` oracle.
+    O(history) per row, so O(history²) per key.
+    """
+    beta = 1.0 - alpha
+    return F.aggregate(
+        values,
+        F.lit(None).cast("double"),
+        lambda acc, x: F.when(acc.isNull(), x).otherwise(acc * F.lit(beta) + x * F.lit(alpha)),
+    )
 
 
 def _w(symbol_col: str, time_col: str, id_col: str):
@@ -294,8 +311,8 @@ def longest_history(
     df: DataFrame, symbol_col: str, fold_limit: int | None = None
 ) -> int | None:
     """Longest per-key row count — the shared probe behind every
-    ``*_auto`` fold-vs-pandas routing switch (enrich_auto, macd_auto,
-    adx_auto, heikin_ashi_auto).
+    ``*_auto`` fold-vs-pandas routing switch (macd_auto, adx_auto,
+    heikin_ashi_auto).
 
     Scan-shaped bounded frames take the driver-side parquet-footer probe
     (:func:`_metadata_longest` — no Spark job, ~ms): EXACT results are
@@ -328,8 +345,7 @@ def macd_auto(
     close_col: str = "close",
     fold_limit: int = 1000,
 ) -> DataFrame:
-    """MACD with automatic path selection, same contract as
-    ``indicators.enrich_auto``: probe the longest per-key history
+    """MACD with automatic path selection: probe the longest per-key history
     (:func:`longest_history`), fold below ``fold_limit`` rows/key,
     pandas above.  Both paths are bit-identical (asserted in tests), so
     the switch only changes the physical plan, never results."""

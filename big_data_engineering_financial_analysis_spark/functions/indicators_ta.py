@@ -36,10 +36,10 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from big_data_engineering_financial_analysis_spark.functions.indicators import _ema_fold
 from big_data_engineering_financial_analysis_spark.operators.partitioning import spread_by
 from big_data_engineering_financial_analysis_spark.functions.indicators_ext import (
     TRADING_DAYS,
+    _ema_fold,
     longest_history,
 )
 

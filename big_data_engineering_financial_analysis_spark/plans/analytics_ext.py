@@ -314,7 +314,9 @@ def ilp_lines(enriched: DataFrame) -> DataFrame:
     Here it is a single ``format_string`` expression — C-style %.6f keeps
     the text identical across engines (printf in the oracle).  NULL
     indicators render as the literal ``nan`` like the reference's float
-    str() of NaN would.
+    str() of NaN would.  ``event_id`` is carried through when the input
+    has one (the test tables); candles parsed from the Kafka wire
+    (``sources.kafka.parse_candle_json``) have none and get ``line`` only.
     """
     # Spark format_string renders a NULL arg as the text "null" (it does
     # not null the result), so the NULL case must be branched before
@@ -322,8 +324,9 @@ def ilp_lines(enriched: DataFrame) -> DataFrame:
     num = lambda c: F.when(
         F.col(c).isNotNull(), F.format_string("%.6f", F.col(c))
     ).otherwise(F.lit("nan"))
+    ids = ["event_id"] if "event_id" in enriched.columns else []
     return enriched.select(
-        "event_id",
+        *ids,
         F.format_string(
             'stock_data,stock_symbol=%s close=%s,sma_5=%s,ema_10=%s,rsi_10=%s,signal="%s" %d',
             F.col("stock_symbol"),

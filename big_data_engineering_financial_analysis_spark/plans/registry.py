@@ -25,7 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_engineering_financial_analysis_spark.functions.indicators import enrich_auto
+from big_data_engineering_financial_analysis_spark.functions.indicators import enrich
 from big_data_engineering_financial_analysis_spark.operators.windows import (
     feature_windows,
     last_per_group,
@@ -55,9 +55,10 @@ INDICATOR_COLS = [
 
 # ---------------------------------------------------------------------------
 # Shared DuckDB CTE: the full indicator pipeline over events-as-candles.
-# Mirrors functions/indicators.py expression by expression (same constants,
-# same fold order, same NULL gating) so results agree to the last few ulps;
-# outputs are rounded at each query's final SELECT.
+# Mirrors the indicator kernel (streaming/state.py step) expression by
+# expression (same constants, same summation order, same NULL gating) so
+# results agree to the last few ulps; outputs are rounded at each query's
+# final SELECT.
 # ---------------------------------------------------------------------------
 
 ENRICHED_CTE = """
@@ -114,8 +115,8 @@ def _enriched(spark: SparkSession, sf_dir: str, symbols: list[str] | None = None
     pushed into the parquet scan (cast blocks source filters), whereas
     ``user_id IN (...)`` reaches PushedFilters — at scale that is a full
     scan versus reading one symbol's row groups.  Pre-filtering on the
-    window partition key commutes with the per-symbol window enrichment,
-    so results are identical to filtering afterwards.
+    grouping key commutes with the per-symbol enrichment, so results are
+    identical to filtering afterwards.
     """
     ev = load_table(spark, sf_dir, "events")
     if symbols is not None:
@@ -127,7 +128,7 @@ def _enriched(spark: SparkSession, sf_dir: str, symbols: list[str] | None = None
         F.col("value").alias("close"),
         F.col("event_type"),
     )
-    return enrich_auto(candles)
+    return enrich(candles)
 
 
 def _round6(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -158,20 +159,20 @@ def q_enrich_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_enrich_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming keyed-state kernel (streaming/state.py), run in batch
-    via applyInPandas and checked against the SAME SQL oracle as the
-    window-function pipeline — proving incremental == declarative.
+    """The streaming row contract of the indicator kernel
+    (``streaming.state.process_group``), run in batch via applyInPandas
+    and checked against the same SQL oracle as enrich_indicators.
 
-    The kernel drops (symbol, time) ties (first-writer-wins, its streaming
-    contract) while the window oracle enriches every row, so the input is
-    deduped to the min-event_id row per (symbol, time) FIRST and the oracle
-    (below) applies the identical dedup — keeping the equivalence valid on
-    any dataset, not just fixtures that happen to have unique keys.
+    The stream drops (symbol, time) ties (first-writer-wins) while the
+    window oracle enriches every row, so the input is deduped to the
+    min-event_id row per (symbol, time) FIRST and the oracle (below)
+    applies the identical dedup — keeping the equivalence valid on any
+    dataset, not just fixtures that happen to have unique keys.
     """
     from big_data_engineering_financial_analysis_spark.operators.windows import last_per_group
     from big_data_engineering_financial_analysis_spark.streaming.state import (
         SymbolState,
-        enriched_ddl_suffix,
+        enriched_ddl,
         process_group,
     )
 
@@ -181,24 +182,13 @@ def q_enrich_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         ascending=True,  # min-event_id row, no negated helper column
     )
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in candles.schema.fields)
-    out_schema = f"{fields}, {enriched_ddl_suffix()}"
 
     def run(pdf):
         return process_group(SymbolState(), pdf, "local_time", "close")
 
-    out = candles.groupBy("stock_symbol").applyInPandas(run, schema=out_schema).select(
-        "event_id", "stock_symbol", "local_time", "close", *INDICATOR_COLS, "signal"
-    )
-    return _round6(out, INDICATOR_COLS)
-
-
-def q_enrich_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Arrow-batched applyInPandas enrichment (pandas ewm per key) —
-    the long-history scale path — against the same SQL oracle."""
-    from big_data_engineering_financial_analysis_spark.functions.indicators import enrich_pandas
-
-    out = enrich_pandas(candles_from_events(spark, sf_dir)).select(
+    out = candles.groupBy("stock_symbol").applyInPandas(
+        run, schema=enriched_ddl(candles.schema)
+    ).select(
         "event_id", "stock_symbol", "local_time", "close", *INDICATOR_COLS, "signal"
     )
     return _round6(out, INDICATOR_COLS)
@@ -405,8 +395,6 @@ ORACLES: dict[str, str] = {
 """,
     )
     + f"SELECT event_id, stock_symbol, local_time, close, {_IND_ROUND}, signal FROM enriched",
-    "enrich_pandas": ENRICHED_CTE
-    + f"SELECT event_id, stock_symbol, local_time, close, {_IND_ROUND}, signal FROM enriched",
     "signal_rule": ENRICHED_CTE
     + "SELECT event_id, stock_symbol, local_time, signal FROM enriched",
     "last_per_minute": """
@@ -546,7 +534,6 @@ ORACLES: dict[str, str] = {
 QUERIES: dict[str, QueryFn] = {
     "enrich_indicators": q_enrich_indicators,
     "enrich_incremental": q_enrich_incremental,
-    "enrich_pandas": q_enrich_pandas,
     "signal_rule": q_signal,
     "last_per_minute": q_last_per_minute,
     "latest_per_key": q_latest_per_key,
@@ -965,13 +952,10 @@ _DRIVER_PRIORITY_R10 = [
 #:                   plans/api.py + tests/test_api.py / test_http_api.py
 #:                   — the same story as api_lowest, retired round 6.
 #: * enrich_pandas — the applyInPandas Arrow twin of enrich_indicators;
-#:                   its oracle SQL is LITERALLY enrich_indicators'.
-#:                   The test asserts frame equality against the still-
-#:                   registered expression path on testdata, and the
-#:                   reference-recipe parity test
-#:                   (tests/test_indicators.py) pins the kernel.  The
-#:                   Arrow path also stays driver-proven via
-#:                   enrich_incremental's O(n) auto-switch parity suite.
+#:                   its oracle SQL was LITERALLY enrich_indicators'.
+#:                   Its query and operator are since deleted: batch
+#:                   enrich itself now runs the per-key kernel through
+#:                   applyInPandas, so enrich_indicators is that path.
 #:
 #: Post-retirement: registry 149/150 (1 slot free), r9 obligation =
 #: 46 r6-stale + 3 never-checked (corpus_shards, token_budget_mix,

@@ -930,11 +930,9 @@ def q_backtest_equity(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame5 = w.rowsBetween(-4, 0)
     close = F.col("close")
     sma5 = F.when(F.count(close).over(frame5) >= 5, F.avg(close).over(frame5))
-    from big_data_engineering_financial_analysis_spark.functions.indicators import _ema_fold
-
     ema10 = F.when(
         F.count(close).over(hist) >= 10,
-        _ema_fold(F.collect_list(close).over(hist), 2.0 / 11.0),
+        ix._ema_fold(F.collect_list(close).over(hist), 2.0 / 11.0),
     )
     b = (
         bars.withColumn("sma_5", sma5)

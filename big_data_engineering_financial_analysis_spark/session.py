@@ -14,6 +14,11 @@ chosen to survive that scale-up:
 - shuffle.partitions defaults to the local core count; on a real cluster
   AQE coalescing makes the initial number mostly irrelevant as long as it
   is not too small.
+- The driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` when set, else a quarter
+  of the host's physical RAM capped at 48 GB: in local mode the driver
+  JVM is the whole engine, and it shares the host with the Python
+  workers, so a fixed 48g default gets the JVM OOM-killed on a 16 GB
+  host.
 """
 
 from __future__ import annotations
@@ -25,8 +30,21 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "bdefa-spark"
 
 
+#: Cap of the RAM-derived default driver heap.
+MAX_DEFAULT_DRIVER_MB = 48 * 1024
+
+
 def _local_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def physical_ram_mb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+
+
+def default_driver_mem() -> str:
+    """Driver heap used when ``SPARK_GRAFT_DRIVER_MEM`` is unset."""
+    return f"{min(physical_ram_mb() // 4, MAX_DEFAULT_DRIVER_MB)}m"
 
 
 def get_spark(
@@ -53,7 +71,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.fallback.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # the synthetic events table stores TIMESTAMP(NANOS) which Spark has

@@ -14,8 +14,8 @@ driver-side pandas bottleneck:
     restart                                 restart)
     fresh KafkaProducer per batch           native Kafka sink / parquet sink
 
-The indicator math lives in streaming/state.py and is bit-identical to the
-batch kernel for in-order input.
+The indicator math is streaming/state.py's per-key kernel, the same code
+batch ``functions.indicators.enrich`` runs.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ from pyspark.sql.types import StructType
 from big_data_engineering_financial_analysis_spark.streaming.state import (
     STATE_DDL,
     SymbolState,
+    enriched_ddl,
     process_group,
 )
 
@@ -48,10 +49,7 @@ def enrich_stream(
     symbols; each micro-batch does O(rows) work.  Contrast with the
     reference's O(history) per batch.
     """
-    from big_data_engineering_financial_analysis_spark.streaming.state import enriched_ddl_suffix
-
-    in_fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in candles.schema.fields)
-    out_schema = f"{in_fields}, {enriched_ddl_suffix()}"
+    out_schema = enriched_ddl(candles.schema)
 
     def update(key, pdfs, group_state):
         import pandas as pd
@@ -227,9 +225,8 @@ def enrich_stream_tws(
     arbitrary-state API: state lives in a typed ValueState instead of the
     applyInPandasWithState tuple, which buys per-state-variable TTLs,
     multiple state variables per key, and timers when the pipeline needs
-    them.  Output is identical row-for-row for in-order input (asserted in
-    tests against both the applyInPandasWithState path and the batch
-    kernel).
+    them.  It runs the same :func:`..state.process_group` as
+    ``enrich_stream``, so output is identical row for row.
 
     Environment note: the TWS state-server protocol needs
     ``google.protobuf`` and the RocksDB state store provider
@@ -244,10 +241,7 @@ def enrich_stream_tws(
     )
     from pyspark.sql.types import StructType
 
-    from big_data_engineering_financial_analysis_spark.streaming.state import enriched_ddl_suffix
-
-    in_fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in candles.schema.fields)
-    out_schema = f"{in_fields}, {enriched_ddl_suffix()}"
+    out_schema = enriched_ddl(candles.schema)
     state_schema = StructType.fromDDL(STATE_DDL)
 
     class EnrichProcessor(StatefulProcessor):

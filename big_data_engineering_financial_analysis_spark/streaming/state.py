@@ -1,4 +1,4 @@
-"""Incremental indicator state machine.
+"""The indicator kernel: one per-symbol recursion for batch and stream.
 
 The reference recomputes every indicator over the FULL accumulated history
 on every micro-batch (services/stream-processing/app/consumer.py:184-192:
@@ -14,17 +14,39 @@ module keeps O(1) state per symbol:
     n_delta  non-null deltas so far
     last_close, last_time_us        (delta + late-row policy)
 
-For rows arriving in event-time order per key, the incremental recursion
-performs the *same floating-point operations in the same order* as the
-batch window kernel (functions/indicators.py) — outputs are bit-identical,
-which tests/test_streaming.py asserts.
+:func:`step` advances that state by one row.  It is the ONLY indicator
+kernel: batch ``functions.indicators.enrich`` runs it per key from an
+empty state (:func:`enrich_group`), the streaming pipelines run it per
+key from the checkpointed state (:func:`process_group`), so batch and
+stream agree bit for bit by construction.  Both feed it from one
+columnar loop over the key's rows: a stable ``argsort`` on the int64 µs
+time, a loop over the closes as Python floats, and one ``DataFrame``
+built from the column arrays.
 
-Late-data policy: the reference has no watermark — a late row for an
-already-seen (symbol, time) is dropped by the ``already_sent`` set, and a
-late row for an unseen time silently corrupts the recomputation
-(consumer.py:199-205).  Here lateness is explicit: rows at or before the
-key's ``last_time`` are dropped (first-writer-wins, matching the
-reference's observable output), and the bound is checkpointable state.
+The arithmetic is the DuckDB ``ENRICHED_CTE`` oracle's (plans/registry.py)
+expression by expression: the 5- and 10-row windows summed in event order
+then divided, the EMA seeded with the first close, ``+ 0.0`` folding
+IEEE -0.0 in the clips.
+
+Row contracts of the two callers:
+
+* **Batch** (:func:`enrich_group`): one output row per input row.  Ties
+  (same symbol and time) are all enriched, in stable time order, as the
+  window form ``PARTITION BY symbol ORDER BY time`` does.  A row with a
+  NULL or NaN close is emitted with NULL indicators and ``HOLD`` and does
+  not advance the state, so the next row's delta is taken against the
+  last usable close.  (The retired window/fold kernel let such a row
+  blank the windows after it, and a NaN close made its EMA NaN for the
+  rest of the series.)  A NaN close itself comes out as NULL, as Arrow's
+  pandas conversion maps every NaN to NULL.
+* **Stream** (:func:`process_group`): first writer wins — rows at or
+  before the key's last time (late rows, duplicates, ties, NULL times)
+  and rows with a NULL/NaN close are dropped without a state advance.
+  The reference has no watermark — a late row for an already-seen
+  (symbol, time) is dropped by the ``already_sent`` set, and a late row
+  for an unseen time silently corrupts the recomputation
+  (consumer.py:199-205); here lateness is explicit and the bound is
+  checkpointable state.
 """
 
 from __future__ import annotations
@@ -32,16 +54,15 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 
-from big_data_engineering_financial_analysis_spark.functions.indicators import (
-    BUY,
-    EMA_SPAN,
-    HOLD,
-    RSI_WINDOW,
-    SELL,
-    SMA_WINDOW,
-)
+#: pandas ewm(span=10) smoothing factor: alpha = 2 / (span + 1).
+EMA_SPAN = 10
+SMA_WINDOW = 5
+RSI_WINDOW = 10
+
+BUY, SELL, HOLD = "BUY", "SELL", "HOLD"
 
 ALPHA = 2.0 / (EMA_SPAN + 1.0)
 BETA = 1.0 - ALPHA
@@ -90,35 +111,32 @@ STATE_DDL = (
     "ema double, n_seen long, n_delta long, last_close double, last_time_us long"
 )
 
-#: Output columns appended to (stock_symbol, local_time, close).
+#: Output columns appended to the input columns.
 OUT_COLS = [
     "sma_5", "ema_10", "delta", "gain", "loss",
     "avg_gain_10", "avg_loss_10", "rs", "rsi_10", "signal",
 ]
 
-
-def enriched_ddl_suffix() -> str:
-    """DDL fragment for the indicator output columns — the single source
-    the applyInPandas/applyInPandasWithState schemas derive from."""
-    return ", ".join(
-        f"{c} string" if c == "signal" else f"{c} double" for c in OUT_COLS
-    )
+#: Output of a row with no usable close (batch only): NULL indicators.
+_NO_CLOSE = (math.nan,) * (len(OUT_COLS) - 1) + (HOLD,)
 
 
-def step(state: SymbolState, close: float, time_us: int) -> dict | None:
-    """Advance one row; return the enriched output row or None if late.
+def enriched_ddl(schema) -> str:
+    """Spark DDL of ``schema``'s columns followed by the indicator
+    columns — the output schema of every ``applyInPandas`` /
+    ``applyInPandasWithState`` caller of this kernel."""
+    fields = [f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields]
+    fields += [f"{c} string" if c == "signal" else f"{c} double" for c in OUT_COLS]
+    return ", ".join(fields)
 
-    Every arithmetic expression mirrors functions/indicators.py so the
-    incremental path is bit-identical to the batch window kernel for
-    in-order input.
-    """
-    if time_us <= state.last_time_us:
-        return None  # late or duplicate: first-writer-wins
 
+def _advance(state: SymbolState, close: float, time_us: int) -> tuple:
+    """Advance ``state`` by one row with a usable close; return the
+    indicator values in :data:`OUT_COLS` order."""
     state.n_seen += 1
 
-    # SMA-5: mean of the full window, summed in event order (same order as
-    # the batch window aggregate) — gated on a full window.
+    # SMA-5: mean of the full window, summed in event order — gated on a
+    # full window.
     window = state.closes + [close]
     sma = sum(window) / SMA_WINDOW if len(window) >= SMA_WINDOW else math.nan
 
@@ -131,12 +149,12 @@ def step(state: SymbolState, close: float, time_us: int) -> dict | None:
         delta = gain = loss = math.nan
     else:
         delta = close - state.last_close
-        # "+ 0.0" folds IEEE -0.0 to +0.0, matching the batch paths/oracle.
-        # NaN clip parity with the batch kernel's greatest/least: Spark
-        # treats NaN as LARGER than any numeric, so greatest(NaN, 0) is
-        # NaN (max(delta, 0.0) with delta first reproduces it) while
-        # least(NaN, 0) is 0.0 — which Python's min() gets wrong
-        # (min(nan, 0.0) -> nan), hence the explicit comparison.
+        # "+ 0.0" folds IEEE -0.0 to +0.0, matching the oracle.  NaN clip
+        # parity with SQL greatest/least: NaN is LARGER than any numeric,
+        # so greatest(NaN, 0) is NaN (max(delta, 0.0) with delta first
+        # reproduces it) while least(NaN, 0) is 0.0 — which Python's
+        # min() gets wrong (min(nan, 0.0) -> nan), hence the explicit
+        # comparison.
         gain = max(delta, 0.0) + 0.0
         loss = (-delta if delta < 0.0 else 0.0) + 0.0
         state.n_delta += 1
@@ -172,40 +190,57 @@ def step(state: SymbolState, close: float, time_us: int) -> dict | None:
     state.last_close = close
     state.last_time_us = time_us
 
-    return {
-        "sma_5": sma,
-        "ema_10": ema_out,
-        "delta": delta,
-        "gain": gain,
-        "loss": loss,
-        "avg_gain_10": avg_gain,
-        "avg_loss_10": avg_loss,
-        "rs": rs,
-        "rsi_10": rsi,
-        "signal": signal,
-    }
+    return (sma, ema_out, delta, gain, loss, avg_gain, avg_loss, rs, rsi, signal)
+
+
+def step(state: SymbolState, close: float, time_us: int) -> dict | None:
+    """Advance one row; return the enriched output row or None if late
+    (at or before the key's last time: first-writer-wins)."""
+    if time_us <= state.last_time_us:
+        return None
+    return dict(zip(OUT_COLS, _advance(state, close, time_us)))
+
+
+def _enrich_key(
+    state: SymbolState, pdf: pd.DataFrame, time_col: str, close_col: str, stream: bool
+) -> pd.DataFrame:
+    """The columnar per-key loop behind :func:`enrich_group` and
+    :func:`process_group`; ``stream`` picks the row contract (module doc).
+
+    Arrow surfaces a SQL NULL close as NaN in float chunks, so one NaN
+    test covers both.  Columns are read and written by name, so names
+    that are not Python identifiers (``24h_vol``) pass through intact."""
+    time_us = pdf[time_col].to_numpy(dtype="datetime64[us]").view(np.int64)  # NaT -> min
+    closes = pdf[close_col].to_numpy(dtype=np.float64, na_value=np.nan)
+    order = np.argsort(time_us, kind="stable")
+    keep, rows = [], []
+    for i, t, c in zip(order.tolist(), time_us[order].tolist(), closes[order].tolist()):
+        if c != c:  # NULL or NaN close
+            if not stream:
+                keep.append(i)
+                rows.append(_NO_CLOSE)
+            continue
+        if stream and t <= state.last_time_us:
+            continue
+        keep.append(i)
+        rows.append(_advance(state, c, t))
+
+    keep = np.asarray(keep, dtype=np.intp)
+    out = {c: pdf[c].to_numpy()[keep] for c in pdf.columns}
+    values = list(zip(*rows)) or [()] * len(OUT_COLS)
+    for c, v in zip(OUT_COLS, values):
+        out[c] = np.array(v, dtype=object if c == "signal" else np.float64)
+    return pd.DataFrame(out)
+
+
+def enrich_group(pdf: pd.DataFrame, time_col: str, close_col: str) -> pd.DataFrame:
+    """Batch: enrich one key's full history from an empty state — every
+    input row comes out once, in time order."""
+    return _enrich_key(SymbolState(), pdf, time_col, close_col, stream=False)
 
 
 def process_group(state: SymbolState, pdf: pd.DataFrame, time_col: str, close_col: str) -> pd.DataFrame:
-    """Run :func:`step` over one key's micro-batch rows in event-time order.
-
-    Rows with no usable close — NULL (``float(None)`` would kill the
-    whole streaming query for one malformed exchange record; Arrow also
-    surfaces SQL NULL as NaN in float chunks) or NaN (it would poison
-    the EMA recursion permanently) — are QUARANTINED: skipped, never
-    emitted, no state advance.  Iteration uses ``to_dict`` —
-    ``itertuples`` positionally renames column names that are not valid
-    Python identifiers (``24h_vol`` → ``_3``), silently corrupting the
-    output schema."""
-    pdf = pdf.sort_values(time_col, kind="stable")
-    out_rows = []
-    for d in pdf.to_dict("records"):
-        close = d[close_col]
-        if close is None or (isinstance(close, float) and math.isnan(close)):
-            continue  # no usable price: quarantined
-        ts = d[time_col]
-        time_us = int(pd.Timestamp(ts).value // 1000)
-        res = step(state, float(close), time_us)
-        if res is not None:
-            out_rows.append({**d, **res})
-    return pd.DataFrame(out_rows)
+    """Stream: enrich one key's micro-batch rows from (and into) ``state``
+    — late/duplicate rows and NULL/NaN closes are dropped, never emitted,
+    and never advance the state."""
+    return _enrich_key(state, pdf, time_col, close_col, stream=True)

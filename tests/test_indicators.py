@@ -14,7 +14,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from big_data_engineering_financial_analysis_spark.functions.indicators import enrich, enrich_pandas
+from big_data_engineering_financial_analysis_spark.functions.indicators import enrich
 
 NUM_COLS = [
     "sma_5", "ema_10", "delta", "gain", "loss",
@@ -97,11 +97,6 @@ def _compare(result: pd.DataFrame, oracle: pd.DataFrame):
 
 def test_window_enrich_matches_reference_recipe(spark, candles):
     result = enrich(spark.createDataFrame(candles)).toPandas()
-    _compare(result, reference_recipe(candles))
-
-
-def test_pandas_enrich_matches_reference_recipe(spark, candles):
-    result = enrich_pandas(spark.createDataFrame(candles)).toPandas()
     _compare(result, reference_recipe(candles))
 
 

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from big_data_engineering_financial_analysis_spark.plans.registry import (
     q_api_highest,
-    q_enrich_pandas,
 )
 
 SF = "/root/testdata/sf0.01"
@@ -29,27 +28,6 @@ def test_api_highest_is_projection_of_summarize(spark):
     summary = QUERIES["summarize"](spark, SF).collect()
     assert len(highest) == 1 and len(summary) == 1
     assert highest[0]["highest_close"] == summary[0]["max_close"]
-
-
-def test_enrich_pandas_equals_expression_path(spark):
-    """The applyInPandas Arrow twin produces the SAME frame as the
-    still-registered expression path (enrich_indicators) on real
-    testdata — its oracle SQL was literally enrich_indicators', so
-    frame equality means every driver check of enrich_indicators
-    re-proves the retired row.  The kernel itself stays pinned by the
-    reference-recipe parity test in tests/test_indicators.py and the
-    O(n) auto-switch bit-parity suite."""
-    from big_data_engineering_financial_analysis_spark.plans.registry import QUERIES
-
-    pandas_rows = sorted(
-        q_enrich_pandas(spark, SF).collect(), key=lambda r: r["event_id"]
-    )
-    expr_rows = sorted(
-        QUERIES["enrich_indicators"](spark, SF).collect(),
-        key=lambda r: r["event_id"],
-    )
-    assert len(pandas_rows) == len(expr_rows) > 0
-    assert pandas_rows == expr_rows
 
 
 def test_retired_rows_are_unregistered(spark):

@@ -4,11 +4,7 @@
 
 Protocol: one bench-identical session (get_spark, sf0.1, noop force),
 one warm-up execution per query, then FIVE timed executions each —
-every observation recorded, min + median reported.  For
-enrich_indicators the enrich_auto count-probe aggregate is also timed
-separately to quantify its share of the wall (r11 ask #4's suspected
-double-probe: the probe runs once per invocation by design; this
-measures what it costs).
+every observation recorded, min + median reported.
 
 Run on an idle machine:
 
@@ -52,23 +48,6 @@ for name in ("dedup_minhash_lsh", "enrich_indicators"):
         "max": srt[-1],
     }
     spark.catalog.clearCache()
-
-# enrich_auto's routing probe, timed alone (one scan + two aggregates)
-from pyspark.sql import functions as F  # noqa: E402
-
-from big_data_engineering_financial_analysis_spark.sources.parquet import load_table  # noqa: E402
-
-candles = load_table(spark, SF_DIR, "events").select(
-    F.col("user_id").cast("string").alias("stock_symbol")
-)
-probe_obs = []
-for _ in range(N):
-    t0 = time.perf_counter()
-    candles.groupBy("stock_symbol").agg(
-        F.count(F.lit(1)).alias("n")
-    ).agg(F.max("n")).first()
-    probe_obs.append(round(time.perf_counter() - t0, 3))
-out["enrich_auto_probe_alone"] = {"obs": probe_obs, "min": min(probe_obs)}
 
 print(json.dumps(out))
 spark.stop()
