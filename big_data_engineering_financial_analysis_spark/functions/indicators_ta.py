@@ -369,9 +369,6 @@ def xsec_momentum(
     ret = F.col("close") / F.nullif(F.lag("close", lookback).over(w), F.lit(0.0)) - 1.0
     scored = bars.withColumn("mom_ret", ret).filter(F.col("mom_ret").isNotNull())
 
-    # stage-2 probe (r13): pin the time-keyed ranking window's
-    # parallelism too — measured at 8 and 32 cores before wiring (the
-    # r12 round measured the symbol-keyed spread neutral here at 32)
     # pin the stage-2 (time-keyed) ranking window's parallelism as well
     # (r13): measured isolated min-of-5 — 8 cores 2.08 -> 1.05 s, 32
     # cores 1.41 -> 1.34 s (the r12 round had measured only the 32-core

@@ -10,6 +10,7 @@ write (see :func:`write_timeseries`).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,26 +74,39 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-class _LazyTables(dict):
-    """dict of table name -> DataFrame that reads each parquet table on
-    FIRST access (r13): ``spark.read.parquet`` costs ~60-90 ms of driver
-    work per table (footer/schema resolution), and the eager ten-table
-    dict charged every consumer for all ten — measured ~0.4 s of the
+class _LazyTables(Mapping):
+    """Read-only mapping of table name -> DataFrame over :data:`TABLES`
+    that reads each parquet table on FIRST access (r13):
+    ``spark.read.parquet`` costs ~60-90 ms of driver work per table
+    (footer/schema resolution), and the eager ten-table dict charged
+    every consumer for all ten — measured ~0.4 s of the
     ``local_supplier_volume`` construction for four tables the query
-    never touches.  Unaccessed tables are never read; accessed ones are
-    memoized like the old dict."""
+    never touches.  Keys, ``in``, ``len()`` and iteration answer from
+    :data:`TABLES` without reading anything; a value is read when it is
+    first asked for and memoized."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
-        super().__init__()
         self._spark, self._sf_dir = spark, sf_dir
+        self._loaded: dict[str, DataFrame] = {}
 
-    def __missing__(self, name: str) -> DataFrame:
-        df = load_table(self._spark, self._sf_dir, name)
-        self[name] = df
-        return df
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._loaded:
+            if name not in TABLES:
+                raise KeyError(name)
+            self._loaded[name] = load_table(self._spark, self._sf_dir, name)
+        return self._loaded[name]
+
+    def __contains__(self, name: object) -> bool:
+        return name in TABLES
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(TABLES)
+
+    def __len__(self) -> int:
+        return len(TABLES)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+def load_tables(spark: SparkSession, sf_dir: str) -> Mapping[str, DataFrame]:
     return _LazyTables(spark, sf_dir)
 
 

@@ -6,9 +6,11 @@ driver-side pandas bottleneck:
     reference                               this engine
     ---------------------------------       --------------------------------
     foreachBatch -> toPandas() on the       applyInPandasWithState keyed by
-    driver, Arrow disabled, full-history    symbol: Arrow-batched, executor-
-    recompute per batch (consumer.py:       side, O(batch) work, O(1) state
-    160-223)                                per key, checkpointable
+    driver, Arrow disabled, full-history    symbol hash bucket: Arrow-
+    recompute per batch (consumer.py:       batched, executor-side, O(batch)
+    160-223)                                work, O(1) state per symbol
+                                            inside its bucket's state row,
+                                            checkpointable
     in-memory ``already_sent`` set          withWatermark + dropDuplicates
     (consumer.py:28,199-205), lost on       (state-store backed, survives
     restart                                 restart)
@@ -25,11 +27,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from big_data_engineering_financial_analysis_spark.streaming.state import (
+    N_BUCKETS,
     STATE_DDL,
     SymbolState,
+    bucket_state_ddl,
     enriched_ddl,
+    process_bucket,
     process_group,
 )
+
+#: enrich_stream's grouping column; dropped before the kernel runs, so it
+#: never reaches the output.
+_BUCKET_COL = "__enrich_bucket"
 
 
 def enrich_stream(
@@ -45,41 +54,48 @@ def enrich_stream(
     mode; late/duplicate rows per key are dropped (first-writer-wins, the
     reference's observable semantics).
 
-    Scale: state is ~25 doubles per symbol; parallelism is the number of
-    symbols; each micro-batch does O(rows) work.  Contrast with the
-    reference's O(history) per batch.
+    Scale: the keyed state is spread over :data:`..state.N_BUCKETS`
+    hash buckets of the symbol (``pmod(xxhash64(symbol), N_BUCKETS)``),
+    one ``applyInPandasWithState`` group and one state row per bucket,
+    holding ~25 doubles for each of its symbols.  Spark's per-group
+    Python framing (state decode, Arrow slice to pandas, state encode)
+    is paid once per bucket per micro-batch instead of once per symbol;
+    the price is that parallelism is capped at ``N_BUCKETS`` and that a
+    touched bucket rewrites the state of all its symbols, which a dense
+    feed (every symbol every minute) touches anyway.  Each micro-batch
+    does O(rows) indicator work.  Contrast with the reference's
+    O(history) per batch.
     """
     out_schema = enriched_ddl(candles.schema)
+    state_schema = bucket_state_ddl(candles.schema[symbol_col].dataType.simpleString())
 
     def update(key, pdfs, group_state):
         import pandas as pd
 
-        if group_state.exists:
-            st = SymbolState.from_tuple(group_state.get)
-        else:
-            st = SymbolState()
-        # CONCATENATE the Arrow chunks before the event-time sort: a key
-        # whose micro-batch exceeds arrow.maxRecordsPerBatch arrives as
-        # several chunks in arbitrary order, and sorting each alone would
-        # advance the dedup watermark past later-chunk rows (silently
-        # dropped as "late") and feed the EMA/RSI recursion out of order
-        # — the same hazard streaming/packing.pack_stream documents.
+        # CONCATENATE the Arrow chunks before the event-time sort: a
+        # bucket whose micro-batch exceeds arrow.maxRecordsPerBatch
+        # arrives as several chunks in arbitrary order, and sorting each
+        # alone would advance a symbol's last time past later-chunk rows
+        # (silently dropped as "late") and feed the EMA/RSI recursion out
+        # of order — the same hazard streaming/packing.pack_stream
+        # documents.
         chunks = [p for p in pdfs if len(p)]
         if not chunks:
-            group_state.update(st.to_tuple())
             return
-        out = process_group(
-            st, pd.concat(chunks, ignore_index=True), time_col, close_col
-        )
-        group_state.update(st.to_tuple())
+        pdf = pd.concat(chunks, ignore_index=True).drop(columns=_BUCKET_COL)
+        out, value = process_bucket(group_state.getOption, pdf, symbol_col, time_col, close_col)
+        group_state.update(value)
         # a batch can be entirely late/duplicate rows -> nothing to emit
         if len(out):
             yield out
 
-    return candles.groupBy(symbol_col).applyInPandasWithState(
+    # a helper column, not a grouping expression: Spark 4.1's
+    # applyInPandasWithState resolves its keys against the input columns
+    bucket = F.pmod(F.xxhash64(F.col(symbol_col)), F.lit(N_BUCKETS))
+    return candles.withColumn(_BUCKET_COL, bucket).groupBy(_BUCKET_COL).applyInPandasWithState(
         update,
         outputStructType=out_schema,
-        stateStructType=STATE_DDL,
+        stateStructType=state_schema,
         outputMode="append",
         timeoutConf="NoTimeout",
     )
@@ -225,8 +241,9 @@ def enrich_stream_tws(
     arbitrary-state API: state lives in a typed ValueState instead of the
     applyInPandasWithState tuple, which buys per-state-variable TTLs,
     multiple state variables per key, and timers when the pipeline needs
-    them.  It runs the same :func:`..state.process_group` as
-    ``enrich_stream``, so output is identical row for row.
+    them.  Its state is per symbol (:func:`..state.process_group`)
+    where ``enrich_stream``'s is per bucket; both run the same kernel
+    loop, so output is identical row for row.
 
     Environment note: the TWS state-server protocol needs
     ``google.protobuf`` and the RocksDB state store provider

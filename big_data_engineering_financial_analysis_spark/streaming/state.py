@@ -17,18 +17,30 @@ module keeps O(1) state per symbol:
 :func:`step` advances that state by one row.  It is the ONLY indicator
 kernel: batch ``functions.indicators.enrich`` runs it per key from an
 empty state (:func:`enrich_group`), the streaming pipelines run it per
-key from the checkpointed state (:func:`process_group`), so batch and
-stream agree bit for bit by construction.  Both feed it from one
-columnar loop over the key's rows: a stable ``argsort`` on the int64 µs
-time, a loop over the closes as Python floats, and one ``DataFrame``
-built from the column arrays.
+key from the checkpointed state (:func:`process_bucket`,
+:func:`process_group`), so batch and stream agree bit for bit by
+construction.  All of them feed it from one columnar loop over the rows
+of one or more keys: a stable sort on (key, int64 µs time), a loop over
+the closes as Python floats, and one ``DataFrame`` built from the column
+arrays.
+
+State layout of ``enrich_stream``: the states are stored per hash
+bucket of the symbol, ``pmod(xxhash64(symbol), N_BUCKETS)``, one state
+row per bucket (:func:`bucket_state_ddl`): an array of the bucket's
+symbols, each with its state tuple.  Spark's ``applyInPandasWithState``
+then frames one group per bucket per micro-batch — decoding the state,
+slicing Arrow into pandas, encoding the state — instead of one per
+symbol, at about 5 ms a group on a 4-core host.  A NULL symbol is a key of its own
+inside its bucket.  ``enrich_stream_tws`` and the registry's
+``q_enrich_incremental`` still keep one state per symbol
+(:func:`process_group`).
 
 The arithmetic is the DuckDB ``ENRICHED_CTE`` oracle's (plans/registry.py)
 expression by expression: the 5- and 10-row windows summed in event order
 then divided, the EMA seeded with the first close, ``+ 0.0`` folding
 IEEE -0.0 in the clips.
 
-Row contracts of the two callers:
+Row contracts of the two kinds of caller:
 
 * **Batch** (:func:`enrich_group`): one output row per input row.  Ties
   (same symbol and time) are all enriched, in stable time order, as the
@@ -39,9 +51,10 @@ Row contracts of the two callers:
   blank the windows after it, and a NaN close made its EMA NaN for the
   rest of the series.)  A NaN close itself comes out as NULL, as Arrow's
   pandas conversion maps every NaN to NULL.
-* **Stream** (:func:`process_group`): first writer wins — rows at or
-  before the key's last time (late rows, duplicates, ties, NULL times)
-  and rows with a NULL/NaN close are dropped without a state advance.
+* **Stream** (:func:`process_bucket`, :func:`process_group`): first
+  writer wins per key — rows at or before the key's last time (late
+  rows, duplicates, ties, NULL times) and rows with a NULL/NaN close are
+  dropped without a state advance.
   The reference has no watermark — a late row for an already-seen
   (symbol, time) is dropped by the ``already_sent`` set, and a late row
   for an unseen time silently corrupts the recomputation
@@ -110,6 +123,17 @@ STATE_DDL = (
     "closes array<double>, gains array<double>, losses array<double>, "
     "ema double, n_seen long, n_delta long, last_close double, last_time_us long"
 )
+
+#: Hash buckets of the stream's keyed state (``enrich_stream``): one
+#: ``applyInPandasWithState`` group, and one state row, per bucket.
+N_BUCKETS = 64
+
+
+def bucket_state_ddl(symbol_type: str) -> str:
+    """Spark DDL of one bucket's state: its symbols' state tuples, each
+    with its symbol in front, as one array."""
+    return f"symbols array<struct<symbol {symbol_type}, {STATE_DDL}>>"
+
 
 #: Output columns appended to the input columns.
 OUT_COLS = [
@@ -201,25 +225,31 @@ def step(state: SymbolState, close: float, time_us: int) -> dict | None:
     return dict(zip(OUT_COLS, _advance(state, close, time_us)))
 
 
-def _enrich_key(
-    state: SymbolState, pdf: pd.DataFrame, time_col: str, close_col: str, stream: bool
+def _enrich_rows(
+    states: list, codes: np.ndarray, pdf: pd.DataFrame, time_col: str, close_col: str, stream: bool
 ) -> pd.DataFrame:
-    """The columnar per-key loop behind :func:`enrich_group` and
-    :func:`process_group`; ``stream`` picks the row contract (module doc).
+    """The columnar loop behind every caller: row ``i`` belongs to the
+    key whose state is ``states[codes[i]]``; ``stream`` picks the row
+    contract (module doc).  Rows are taken in a stable sort on (key, µs
+    time), so each key sees its own rows in time order, ties in arrival
+    order.
 
     Arrow surfaces a SQL NULL close as NaN in float chunks, so one NaN
     test covers both.  Columns are read and written by name, so names
     that are not Python identifiers (``24h_vol``) pass through intact."""
     time_us = pdf[time_col].to_numpy(dtype="datetime64[us]").view(np.int64)  # NaT -> min
     closes = pdf[close_col].to_numpy(dtype=np.float64, na_value=np.nan)
-    order = np.argsort(time_us, kind="stable")
+    order = np.lexsort((time_us, codes))
     keep, rows = [], []
-    for i, t, c in zip(order.tolist(), time_us[order].tolist(), closes[order].tolist()):
+    for i, k, t, c in zip(
+        order.tolist(), codes[order].tolist(), time_us[order].tolist(), closes[order].tolist()
+    ):
         if c != c:  # NULL or NaN close
             if not stream:
                 keep.append(i)
                 rows.append(_NO_CLOSE)
             continue
+        state = states[k]
         if stream and t <= state.last_time_us:
             continue
         keep.append(i)
@@ -233,14 +263,35 @@ def _enrich_key(
     return pd.DataFrame(out)
 
 
+def _one_key(pdf: pd.DataFrame) -> np.ndarray:
+    return np.zeros(len(pdf), dtype=np.intp)
+
+
 def enrich_group(pdf: pd.DataFrame, time_col: str, close_col: str) -> pd.DataFrame:
     """Batch: enrich one key's full history from an empty state — every
     input row comes out once, in time order."""
-    return _enrich_key(SymbolState(), pdf, time_col, close_col, stream=False)
+    return _enrich_rows([SymbolState()], _one_key(pdf), pdf, time_col, close_col, stream=False)
 
 
 def process_group(state: SymbolState, pdf: pd.DataFrame, time_col: str, close_col: str) -> pd.DataFrame:
     """Stream: enrich one key's micro-batch rows from (and into) ``state``
     — late/duplicate rows and NULL/NaN closes are dropped, never emitted,
     and never advance the state."""
-    return _enrich_key(state, pdf, time_col, close_col, stream=True)
+    return _enrich_rows([state], _one_key(pdf), pdf, time_col, close_col, stream=True)
+
+
+def process_bucket(
+    value: tuple | None, pdf: pd.DataFrame, symbol_col: str, time_col: str, close_col: str
+) -> tuple[pd.DataFrame, tuple]:
+    """Stream: :func:`process_group` for every symbol of one bucket's
+    micro-batch rows at once.  ``value`` is the bucket's state row of
+    :func:`bucket_state_ddl`, or None for a new bucket; returns the
+    output rows and the new state row.  A symbol the bucket has not seen
+    starts from an empty state; a NULL symbol is a key of its own, as
+    ``groupBy`` makes it."""
+    states = {t[0]: SymbolState.from_tuple(t[1:]) for t in value[0]} if value else {}
+    codes, uniques = pd.factorize(pdf[symbol_col], use_na_sentinel=False)
+    keys = [None if k != k else k for k in uniques.tolist()]  # NaN -> None
+    per_code = [states.setdefault(k, SymbolState()) for k in keys]
+    out = _enrich_rows(per_code, codes, pdf, time_col, close_col, stream=True)
+    return out, ([(k, *st.to_tuple()) for k, st in states.items()],)

@@ -268,3 +268,23 @@ def test_ilp_stream_writer_foreachbatch(spark, tcp_sink, tmp_path):
             break
         _t.sleep(0.05)
     assert b"stock_data,s=X close=1.0 1\n" in b"".join(received)
+
+
+def test_load_tables_mapping_reflects_tables_without_reading(spark, tmp_path):
+    """Keys, ``in``, ``len()``, ``get()`` and iteration answer from
+    TABLES before any access; only asking for a value reads its table."""
+    from big_data_engineering_financial_analysis_spark.sources.parquet import TABLES, load_tables
+    from tests.conftest import SF_SMALL
+
+    empty = load_tables(spark, str(tmp_path))  # no table files: a read would fail
+    assert list(empty) == list(empty.keys()) == TABLES
+    assert len(empty) == len(TABLES)
+    assert "lineitem" in empty and "stock_data" not in empty
+    assert empty.get("stock_data") is None
+    with pytest.raises(KeyError):
+        empty["stock_data"]
+
+    tables = load_tables(spark, SF_SMALL)
+    events = tables.get("events")
+    assert events is tables["events"]  # memoized
+    assert "ts" in events.columns
