@@ -33,7 +33,7 @@ def last_per_group(
     # pin the rank window's parallelism on small inputs (r13: the r12
     # round measured this family neutral at 32 cores only; re-probed at
     # 8 AND 32 cores isolated min-of-5 — last_per_minute 0.79 -> 0.58 s
-    # at 8 cores; see OPTIMIZATION_r13.md.  Selection-only: value-neutral.)
+    # at 8 cores.  Selection-only: value-neutral.)
     df = spread_by(df, *keys)
     order = F.col(order_col).asc() if ascending else F.col(order_col).desc()
     w = Window.partitionBy(*keys).orderBy(order)

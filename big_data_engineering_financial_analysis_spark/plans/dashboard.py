@@ -39,11 +39,12 @@ PANEL_SQL: dict[str, str] = {
         FROM stock_data
         WHERE stock_symbol = '42'
     """,
-    # dashboard.json:604 — current signal stat
+    # dashboard.json:604 — current signal stat; the signal tiebreak makes
+    # a time tie deterministic over the selected columns alone
     "panel_latest_signal": """
         SELECT stock_symbol, local_time, signal FROM stock_data
         WHERE stock_symbol = '42'
-        ORDER BY local_time DESC, event_id DESC LIMIT 1
+        ORDER BY local_time DESC, signal DESC LIMIT 1
     """,
     # dashboard.json:689 — global close stats
     "panel_close_stats": """

@@ -32,7 +32,7 @@ from big_data_engineering_financial_analysis_spark.operators.windows import (
     latest_per_key,
     minmax_scale,
 )
-from big_data_engineering_financial_analysis_spark.plans import analytics, serving
+from big_data_engineering_financial_analysis_spark.plans import analytics, dashboard, serving
 from big_data_engineering_financial_analysis_spark.sources.parquet import (
     candles_from_events,
     load_table,
@@ -594,51 +594,10 @@ from big_data_engineering_financial_analysis_spark.plans import registry_ta as _
 QUERIES.update(_ta.QUERIES)
 ORACLES.update(_ta.ORACLES)
 
-#: Driver-facing ordering.  The per-round correctness check covers the
-#: first 50 registered queries.
-#:
-#: STANDING ROTATION POLICY (adopted round 5, per the round-4 verdict):
-#: no query's most recent driver row may be more than 2 rounds old.
-#: Each round the window takes, in order: (a) queries whose code or
-#: oracle changed since their last driver row, (b) new registrations
-#: with no driver row, (c) every query whose latest row would otherwise
-#: age past 2 rounds, (d) oldest-first fill from the next-stalest tier.
-#: With 148 registered queries and a 50-slot window this is satisfiable
-#: on a 3-round rotation (capacity 150) with near-zero headroom —
-#: registry growth from here should be replacement, not addition.
-#:
-#: RETIRED round 7 (registry capacity, retire-to-grow for the three
-#: skip-and-serve registrations; replacement-not-addition precedent from
-#: round 6).  Each retiree is a strict slice / count-projection /
-#: composition of still-registered rows, and each keeps an explicit
-#: coverage pytest in tests/test_retired_r7.py:
-#:
-#: * rolling_corr        — bit-identical mirrored (42, 7) slice of
-#:                         rolling_corr_pairs (proven in the test).
-#: * lsh_bucket_histogram— count-projection of the sign-LSH bucket stage
-#:                         ann_lsh / dedup_embedding prove end-to-end.
-#: * bpe_packing         — composition of bpe_tokenize's piece kernel and
-#:                         seq_packing's pack_chunks, chunk-for-chunk.
-#: * corpus_funnel       — per-stage survivor counts of corpus_prep's own
-#:                         gate chain (final stage == corpus_prep rows).
-#: * dedup_spans         — detection half of the ExactSubstr family whose
-#:                         removal forms (dedup_span_removal{,_max}, with
-#:                         their removal-set-equivalence test) stay green.
-#:
-#: The query functions and oracle SQL remain importable; only the
-#: registry rows are dropped.  Registry: 147 − 5 + 3 new = 145, + 2
-#: late-round registrations (dedup_clusters_incremental — the
-#: merge_component_labels / star-CC driver proof, oracle identical to
-#: dedup_clusters by the incremental == full-recompute contract —
-#: and doc_chunks, the per-document sliding-window chunker)
-#: + asset_resize (the multimodal build→resize→parse binary round-trip,
-#: arithmetic oracle) = 148 ≤ 150.  None of the three has a driver row
-#: yet → r8 window tier (b).
-#: Measured r8 obligation (CORRECTNESS_r05 ∖ r6-window ∖ r7-window):
-#: 47 r5-stale rows + 3 never-checked = 50 — exactly full.  Any r8
-#: changed-code row must overlap the stale tier or be bought with a
-#: retirement; r8 should budget accordingly (precedent: this round's
-#: window was also exactly 50 via the RETIRED_R7 trade).
+#: RETIRED round 7: each retiree is a strict slice, count-projection or
+#: composition of a still-registered row, with a coverage test in
+#: tests/test_retired_r7.py.  The query functions and oracle SQL remain
+#: importable; only the registry rows are dropped.
 RETIRED_R7 = [
     "rolling_corr", "lsh_bucket_histogram", "bpe_packing",
     "corpus_funnel", "dedup_spans",
@@ -647,328 +606,33 @@ for _name in RETIRED_R7:
     QUERIES.pop(_name, None)
     ORACLES.pop(_name, None)
 
-#: Round-9 window — exactly the obligation the r8 verdict scheduled
-#: (ask #1), recomputed from the CORRECTNESS artifacts this round:
-#: 46 rows whose latest driver row is r6, plus the 3 export rows
-#: registered late in r8 that have never had a driver row
-#: (corpus_shards, token_budget_mix, global_index), plus 1
-#: changed-code slot = 50 — exactly full.
-#:
-#: Changed-code accounting for r9 (tier (a) must overlap or be bought):
-#: * token_budget_mix — the per-domain cumsum is rewritten to the
-#:   distributed two-pass offset form (r8 verdict ask #2) and
-#:   global_index gains asc_nulls_last ordering + a reliable pinning
-#:   mode (advice r8): both rows are already in-window via the
-#:   never-checked tier.  Overlap: free.
-#: * connected_components / connected_components_star now drop NULL-id
-#:   pairs identically on every path (advice r8 path-parity fix).  The
-#:   filter is a provable no-op on non-null ids (all driver data —
-#:   LSH pairs inherit non-null doc_id), but the touched rows'
-#:   standing evidence predates the change, so the free headroom slot
-#:   buys dedup_clusters (r7-latest, the older evidence) a fresh row;
-#:   dedup_clusters_incremental (r8-latest, same kernel, byte-identical
-#:   parity pytests incl. the new null-id cases) rotates on schedule
-#:   in r10.
-#: * value_quartiles — the per-type ntile window is rewritten to the
-#:   global_index two-pass form (same funnel class as the
-#:   token_budget_mix ask).  r8-latest with the window full, so it takes
-#:   the dedup_clusters_incremental treatment: literal-ntile parity +
-#:   plan-shape pytests (tests/test_export.py) pin it now, the driver
-#:   row lands on its scheduled r10 rotation.
-#: * ANN review sweep (r9): ivf_centroids shell-scaled (82%-in-one-cell
-#:   skew fixed) + DEFAULT_IVF_PROBE 4→8 + NULL-adc nulls-last ordering
-#:   + pq.py now imports the shared IVF constants (a hardcoded local
-#:   n_probe default drifted from the oracle the moment the constant
-#:   moved — caught by driver-sim).  Changed rows ann_ivf / ann_ivf_pq /
-#:   ann_pq / ann_pq_rerank are all IN the r9 window; dedup_semantic and
-#:   mmr_diverse (r8-latest, driver-sim MATCH re-run + degenerate-input
-#:   pytests) rotate on schedule in r10 — same precedent as
-#:   value_quartiles above.
-#: * r9 review campaign (rounds of /code-review over storage, ANN, text,
-#:   streaming/sampling, TA, sketch/validation/merge): ~45 findings
-#:   fixed, touching both in-window rows (checked by this round's driver
-#:   run as scheduled) and out-of-window rows (all re-verified MATCH via
-#:   the driver-sim harness in-session, plus the full 149-row local
-#:   oracle sweep in pytest; they rotate on their normal r10/r11
-#:   schedule).  Semantic changes synced into their oracles in the same
-#:   commits: xsec_momentum (effective buckets), text_repetition (dup-
-#:   trigram char-mask union), value_quartiles (NULL groups), ref-
-#:   integrity (MATCH SIMPLE), rolling_corr_pairs (pairwise null gate),
-#:   hash-split boundaries (round), packing token counts (empty docs),
-#:   ANN probe/centroids (shell scale).  Every fix carries a regression
-#:   test in tests/test_review_fixes_r9.py (24 tests).
-#: * dedup_simhash — chunk buckets gain the minhash-LSH bucket cap
-#:   (QUALIFY-mirrored in the oracle; degenerate corpora collapse to one
-#:   15-bit bucket and went quadratic).  r7-latest with the window full,
-#:   so it takes the value_quartiles treatment: driver-sim MATCH re-run
-#:   in-session + a hot-bucket regression pytest (tests/test_dedup.py)
-#:   pin it now; the driver row lands on its scheduled r10 rotation.
-#: * late-r9 storage additions (schema evolution + Z-order write +
-#:   streaming align/writer-id): zonemap/bloomskip gained evolution-gap
-#:   recording behind a known-column gate and `merge_schema=` read
-#:   knobs; the prune/read signatures are additive and the recorded
-#:   zones for non-evolved datasets are unchanged.  The r8-latest rows
-#:   riding those paths (bloom_prune_join, panel_price_series_serve/
-#:   _sharded, panel_indicator_series_sharded, panel_candlestick_sharded,
-#:   zorder_index) take the value_quartiles treatment with the window
-#:   full: all six driver-sim MATCH re-run in-session post-change +
-#:   regression pytests (tests/test_evolution.py, test_layout_write.py,
-#:   the 96-test storage sweep), driver rows land on their scheduled
-#:   r10 rotation.
-#: * forced-broadcast sweep: F.broadcast hints dropped from SF-scaled
-#:   frames (part in promo_revenue, customer in returned_items,
-#:   supplier in local_supplier_volume / nation_volume_flow / the
-#:   shared trade-edge aggregation) — hint-only, results identical
-#:   (driver-sim MATCH re-run on all six queries; the planner still
-#:   broadcasts at test scale from parquet stats).  promo_revenue /
-#:   returned_items / nation_volume_flow are in-window; the r7-latest
-#:   rows (local_supplier_volume, nation_pagerank) rotate in r10 on
-#:   schedule.
-#:
-#: Post-r9 staleness state was r9:50 / r8:50 / r7:49 — no row older
-#: than 2 rounds; registry 149/150.
-#:
-#: Round-10 window — exactly the 49-row r7 tier the r9 verdict
-#: scheduled (ask #3; recomputed via tools/staleness_audit.py this
-#: round) + 1 changed-code slot = 50, exactly full.
-#:
-#: Changed-code accounting for r10 (tier (a) must overlap or be
-#: bought).  The r10 perf rework (commit abbf170, PERF.md r10: LSH
-#: bucket pairs generated without a self-join via _bucket_pairs;
-#: minhash/simhash verify inline on a carried signature payload)
-#: touches dedup_minhash_lsh, dedup_simhash, dedup_ngram_jaccard,
-#: corpus_prep — all four ALREADY in the r7 tier below.  Overlap: free.
-#: Later r10 changes ride the same overlap: dedup_embedding (grouped
-#: bucket pairs, ids-only form) is in the tier below, and the streaming
-#: Bloom build (bloomskip.py BUILD_STREAM_BYTES) only changes the
-#: >128 MB build transport — the window's panel/bloom rows exercise the
-#: unchanged small-build and prune paths (equivalence pytest pins the
-#: streamed shards byte-identical).
-#: Two out-of-window rows ride the same kernel:
-#: * dedup_clusters_incremental (r8-latest, the older evidence) takes
-#:   the one free slot — in-window below.
-#: * dedup_clusters (r9-latest) takes the value_quartiles treatment
-#:   (precedent r9): driver-sim MATCH re-run in-session post-change +
-#:   the standing cluster-parity pytests; its driver row lands on its
-#:   scheduled r11 rotation.
-#: Round-11 window — exactly the 49-row r8 tier the r10 verdict
-#: scheduled (ask #1; recomputed via tools/staleness_audit.py this
-#: round: latest-row distribution entering r11 is r10:50 / r9:50 /
-#: r8:49) + 1 changed-code slot = 50, exactly full.
-#:
-#: Changed-code accounting for r11 (tier (a) must overlap or be
-#: bought).  The r11 correctness fix (advice r10: the grouped
-#: _bucket_pairs path emitted (x,x) self-pairs on duplicate-id corpora
-#: and grouped NULL bucket keys; fixed with a strict id_a < id_b output
-#: filter + NULL-key rejection, dedup.py) touches dedup_minhash_lsh,
-#: dedup_simhash, dedup_ngram_jaccard, dedup_embedding, corpus_prep —
-#: all r10-latest, none in the r8 tier.  The flagship
-#: dedup_minhash_lsh takes the one free slot (the
-#: dedup_clusters_incremental precedent from r10); the other four take
-#: the value_quartiles treatment: driver-sim MATCH re-run in-session
-#: post-fix (10/10 MATCH including dedup_incremental / dedup_semantic /
-#: ann_lsh / dedup_clusters riding adjacent paths) + the new
-#: duplicate-id / NULL-key regression pytests (tests/test_dedup.py) and
-#: the widened hypothesis model (tests/test_datapipe_property.py);
-#: their driver rows land on their scheduled r13 rotation.  The
-#: embedding dedup bucket column rename (bucket -> dedup_bucket, for
-#: the new bucket-self-join plan guard) is name-only inside
-#: embedding_dedup_pairs_lsh and rides the same re-run.
-#:
-#: Measured r12 obligation (tools/staleness_audit.py, post-r11): the
-#: 50-row r9-latest tier (ann_pq family, api_avg, candlestick_feed,
-#: enrich_indicators, summarize, signal_rule, global_stats, pivot_avg,
-#: last_per_minute, corpus_shards, token_budget_mix, global_index,
-#: dedup_clusters, dedup_span_removal_max, ... — the audit prints the
-#: full list) — exactly full: any r12 changed-code row must overlap
-#: that tier or be bought with a retirement (standing precedent).  The
-#: four r11 fix-touched dedup rows (dedup_simhash, dedup_ngram_jaccard,
-#: dedup_embedding, corpus_prep — r10-latest) rotate r13.
-#: Round-12 window — exactly the 50-row r9-latest tier the r11 verdict
-#: scheduled (ask #1; recomputed via tools/staleness_audit.py this
-#: round: latest-row distribution entering r12 is r11:50 / r10:49 /
-#: r9:50).  The tier is exactly full — zero changed-code slots.
-#:
-#: Changed-code accounting for r12 (tier (a) must overlap or be
-#: bought):
-#: * enrich_indicators / enrich_incremental (ask #4 measurement +
-#:   any enrich_auto probe fix) — IN the tier below.  Overlap: free.
-#: * dedup_incremental (ask #3: band-key-bucketed persisted signature
-#:   store + Bloom-pruned store join in streaming/corpus.py +
-#:   streaming/bandstore.py) — the r11 verdict itself schedules its
-#:   driver row for the r13 rotation ("`dedup_incremental` driver row
-#:   green in its r13 rotation slot"), so it takes the value_quartiles
-#:   treatment now: driver-sim MATCH re-run in-session post-change +
-#:   the boundary-invariance pytests; no window slot spent.  The shared
-#:   incremental kernel's verify now runs INLINE on carried signatures
-#:   (_matched_pairs_vs_banded_store, dedup.py — the r10 no-verify-join
-#:   shape, value-identical: est_jaccard is a pure pair function and
-#:   distinct moved after the smaller post-filter frame);
-#:   dedup_clusters_incremental rides it through
-#:   incremental_minhash_pairs — same treatment (driver-sim MATCH
-#:   re-run + cluster-sink boundary pytests), rotates r13 on schedule.
-#: * bloomskip.py hardening (ADVICE r11 items + ask #5 leaf
-#:   fingerprint) — touches bloom_prune_join / zorder_index
-#:   (r11-latest) and panel_*_sharded (r10-latest, rotate r13): all
-#:   value_quartiles treatment (driver-sim MATCH re-run in-session +
-#:   the storage pytest sweep); driver rows land on schedule.
-#: Round-13 window — exactly the 49-row r10-latest tier the rotation
-#: policy obliges (tools/staleness_audit.py, re-run this round:
-#: latest-row distribution entering r13 is r12:50 / r11:50 / r10:49),
-#: plus ONE changed-code slot.  The r12 verdict's ask #8 is satisfied by
-#: construction: the round's highest-risk changed rows — ann_lsh /
-#: ann_ivf (literal-probe rework), ohlc_bars (volume-path grouped
-#: fold), nation_pagerank (driver fold tie-break), macd_12_26 (temp-col
-#: guard), dedup_semantic / dedup_embedding / emb_project /
-#: ann_bruteforce (shared literal builders), stochastic_14,
-#: bpe_tokenize — are ALL in the obliged tier already (they were the
-#: r10 window).  Changed-code accounting for rows OUTSIDE the tier:
-#: * dedup_clusters (new min-label driver union-find fast path) — takes
-#:   the free slot below (r12-latest, but an entirely new execution
-#:   path deserves a driver row over a staleness refresh in the final
-#:   round).
-#: * xsec_momentum (stage-2 keyed spread), feature_windows /
-#:   last_per_minute / sessionize / trailing_time_avg / latest_per_key
-#:   (keyed spreads), enrich_indicators / enrich_incremental
-#:   (metadata-probe routing), ann_pq / ann_pq_rerank / ann_ivf_pq
-#:   (codebook literal builder): all value-neutral plan/probe changes
-#:   with r11/r12-latest driver rows — the value_quartiles treatment
-#:   (in-session full-registry driver-sim MATCH sweep, re-run after the
-#:   last code change this round, + the new parity pytests:
-#:   test_connected_components_driver_fast_path_matches_distributed,
-#:   test_ohlc_volume_grouped_matches_window_form,
-#:   test_frame_path_matches_replace_chain).
-_DRIVER_PRIORITY_R13 = [
-    # (a) changed-code free slot: the r13 min-label CC driver fast path
-    "dedup_clusters",
-    # (c) latest driver row is r10 — refresh now or violate the policy
-    # (49 rows = registered ∩ latest==r10, from tools/staleness_audit.py)
-    "ann_bruteforce", "ann_ivf", "ann_lsh", "anomaly_zscore",
-    "binary_payload", "bm25_search", "bollinger_20", "bpe_tokenize",
-    "cap_per_lang", "cohort_retention", "corpus_prep", "corpus_scrub",
-    "dedup_clusters_incremental", "dedup_embedding", "dedup_exact",
-    "dedup_incremental", "dedup_ngram_jaccard", "dedup_paragraph",
-    "dedup_semantic", "dedup_simhash", "funnel_analysis",
-    "incremental_rollup", "local_supplier_volume", "macd_12_26",
-    "max_drawdown", "nation_pagerank", "ohlc_bars",
-    "panel_candlestick_sharded", "panel_indicator_series_sharded",
-    "panel_price_series_serve", "panel_price_series_sharded",
-    "pricing_summary", "quality_score", "rank_functions",
-    "robust_anomaly", "salted_topk_orders", "scd2_pit_join",
-    "seq_packing", "shipping_priority", "stochastic_14",
-    "summarize_multiple", "temporal_split", "text_quality",
-    "tfidf_top_terms", "train_val_split", "unpivot_close_stats",
-    "vocab_topk", "volatility_20", "weighted_sample",
-]
-
-#: Round-12 window (superseded by _DRIVER_PRIORITY_R13 above; kept for
-#: the accounting trail — the comments above it describe this list).
-_DRIVER_PRIORITY_R12 = [
-    # (c) latest driver row is r9 — refresh now or violate the policy
-    # (50 rows = registered ∩ latest==r9, from tools/staleness_audit.py)
-    "ann_ivf_pq", "ann_pq", "ann_pq_rerank", "api_avg", "asof_join",
-    "candlestick_feed", "corpus_shards", "customers_without_orders",
-    "decontaminate", "dedup_clusters", "dedup_span_removal_max",
-    "doc_fingerprints", "downsample_lang", "emb_norms", "emb_project",
-    "enrich_incremental", "enrich_indicators", "event_type_stats",
-    "events_union", "exact_distinct", "feature_windows",
-    "global_index", "global_stats", "ilp_lines", "lang_id",
-    "large_orders", "last_per_minute", "latest_per_key",
-    "latest_signal", "minmax_scale", "nation_volume_flow",
-    "order_priority_check", "parts_above_avg_price", "pivot_avg",
-    "pricing_rollup", "promo_revenue", "returned_items", "sessionize",
-    "sharpe_rolling", "signal_rule", "summarize", "text_repetition",
-    "text_token_stats", "time_functions", "token_budget_mix",
-    "top_orders_per_customer", "trailing_time_avg",
-    "tumbling_window_stats", "volume_profile", "winnow_fingerprints",
-]
-
-#: Round-11 window (superseded by _DRIVER_PRIORITY_R12 above; kept for
-#: the accounting trail — the comments above it describe this list).
-_DRIVER_PRIORITY_R11 = [
-    # (a) changed-code: the _bucket_pairs self-pair/NULL fix — flagship
-    # row takes the free slot, evidence otherwise r10-latest
-    "dedup_minhash_lsh",
-    # (c) latest driver row is r8 — refresh now or violate the policy
-    # (49 rows = registered ∩ latest==r8, from tools/staleness_audit.py)
-    "ab_test_welch", "adx_dmi", "asset_resize", "atr_keltner",
-    "backtest_equity", "beta_capm", "black_scholes", "bloom_prune_join",
-    "bpe_learn", "calendar_ffill", "countmin_topk",
-    "data_quality_report", "dedup_span_removal", "doc_chunks",
-    "drift_psi", "event_transitions", "heikin_ashi", "hist_quantiles",
-    "historical_var", "ichimoku", "kfold_split", "kmv_distinct",
-    "lstm_dataset", "mmr_diverse", "nation_customer_orders",
-    "nation_triangles", "orders_upsert", "pairs_spread_z",
-    "panel_avg_gain_pivot", "panel_avg_loss_pivot", "panel_candlestick",
-    "panel_close_stats", "panel_gain_loss", "panel_indicator_series",
-    "panel_latest_signal", "panel_price_series", "perplexity_filter",
-    "pricing_cube", "range_join_pairs", "rolling_corr_pairs",
-    "salted_event_stats", "supplier_scd2", "top_orders",
-    "value_percentiles", "value_quartiles", "vwap_obv", "winsorize",
-    "xsec_momentum", "zorder_index",
-]
-
-#: Round-10 window (superseded by _DRIVER_PRIORITY_R11 above; kept for
-#: the accounting trail — the comments above it describe this list).
-_DRIVER_PRIORITY_R10 = [
-    # (a) changed-code, out-of-window evidence: rides the r10
-    # _bucket_pairs rework through minhash pairs (see accounting above)
-    "dedup_clusters_incremental",
-    # (c) latest driver row is r7 — refresh now or violate the policy
-    # (49 rows = registered ∩ latest==r7; the four rework-touched rows
-    # dedup_minhash_lsh / dedup_simhash / dedup_ngram_jaccard /
-    # corpus_prep are tier (a) AND (c))
-    "ann_bruteforce", "ann_ivf", "ann_lsh", "anomaly_zscore",
-    "binary_payload", "bm25_search", "bollinger_20", "bpe_tokenize",
-    "cap_per_lang", "cohort_retention", "corpus_prep", "corpus_scrub",
-    "dedup_embedding", "dedup_exact", "dedup_incremental",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_paragraph",
-    "dedup_semantic", "dedup_simhash", "funnel_analysis",
-    "incremental_rollup", "local_supplier_volume", "macd_12_26",
-    "max_drawdown", "nation_pagerank", "ohlc_bars",
-    "panel_candlestick_sharded", "panel_indicator_series_sharded",
-    "panel_price_series_serve", "panel_price_series_sharded",
-    "pricing_summary", "quality_score", "rank_functions",
-    "robust_anomaly", "salted_topk_orders", "scd2_pit_join",
-    "seq_packing", "shipping_priority", "stochastic_14",
-    "summarize_multiple", "temporal_split", "text_quality",
-    "tfidf_top_terms", "train_val_split", "unpivot_close_stats",
-    "vocab_topk", "volatility_20", "weighted_sample",
-]
-
-#: RETIRED round 8 — proactive capacity relief, not retire-to-grow: the
-#: r7 verdict flagged the registry at 150/150 with the r9 obligation
-#: (48-row r6 tier + 2 never-checked export rows) exactly filling the
-#: window.  Retiring two r6-tier rows cuts the r9 obligation to 48 and
-#: frees 2 capacity slots.  Both retirees follow the RETIRED_R6/R7
-#: standard — each is a strict projection / proven-equal twin of a
-#: still-registered row, with a dedicated coverage pytest in
-#: tests/test_retired_r8.py:
-#:
-#: * api_highest   — round(max(close), 6) over EXACTLY summarize's
-#:                   symbol + time window: a 1-column projection of
-#:                   summarize's max_close (asserted equal in the test).
-#:                   The REST "highest" endpoint path stays covered by
-#:                   plans/api.py + tests/test_api.py / test_http_api.py
-#:                   — the same story as api_lowest, retired round 6.
-#: * enrich_pandas — the applyInPandas Arrow twin of enrich_indicators;
-#:                   its oracle SQL was LITERALLY enrich_indicators'.
-#:                   Its query and operator are since deleted: batch
-#:                   enrich itself now runs the per-key kernel through
-#:                   applyInPandas, so enrich_indicators is that path.
-#:
-#: Post-retirement: registry 149/150 (1 slot free), r9 obligation =
-#: 46 r6-stale + 3 never-checked (corpus_shards, token_budget_mix,
-#: global_index) = 49 — 1 slot of window headroom for r9 changed-code
-#: rows.  Any r9 registration spends one capacity slot AND (if
-#: unregistered by the r9 window cutoff) one r9 window slot; budget
-#: both.
+#: RETIRED round 8, covered by tests/test_retired_r8.py: ``api_highest``
+#: is a 1-column projection of summarize's ``max_close`` (the REST
+#: "highest" endpoint stays covered by plans/api.py), and
+#: ``enrich_pandas`` was enrich_indicators' Arrow twin with the same
+#: oracle; its query and operator are since deleted.
 RETIRED_R8 = ["api_highest", "enrich_pandas"]
 for _name in RETIRED_R8:
     QUERIES.pop(_name, None)
     ORACLES.pop(_name, None)
 
-_DRIVER_PRIORITY = _DRIVER_PRIORITY_R13
-QUERIES = {name: QUERIES[name] for name in _DRIVER_PRIORITY if name in QUERIES} | {
-    name: fn for name, fn in QUERIES.items() if name not in _DRIVER_PRIORITY
+#: The paper's queries, by the SURVEY §3 entry point that serves them.
+#: They lead ``QUERIES``, so a correctness check over the first 50
+#: registered queries always covers them; the rest follow in
+#: registration order.
+PAPER_QUERIES: dict[str, list[str]] = {
+    "streaming job (§3.1)": [
+        "enrich_indicators", "enrich_incremental", "signal_rule",
+        "last_per_minute", "latest_per_key", "ilp_lines",
+    ],
+    "REST API (§3.2)": ["api_avg", "summarize", "summarize_multiple"],
+    "dashboard (§3.3)": [
+        "global_stats", "pivot_avg", "candlestick_feed", "latest_signal",
+        *dashboard.PANEL_SQL,
+    ],
+    "LSTM data prep (§3.4)": ["feature_windows", "minmax_scale", "lstm_dataset"],
+}
+_PAPER_ORDER = [name for names in PAPER_QUERIES.values() for name in names]
+QUERIES = {name: QUERIES[name] for name in _PAPER_ORDER} | {
+    name: fn for name, fn in QUERIES.items() if name not in _PAPER_ORDER
 }

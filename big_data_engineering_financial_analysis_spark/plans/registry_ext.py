@@ -137,7 +137,7 @@ def _serving_store_path(sf_dir: str) -> str:
 #: zone-map time bounds each panel's SQL carries (the pinned dashboard
 #: range); panels without a time predicate read every file of their
 #: symbol partition — Hive pruning still applies, the zone map has
-#: nothing to cut (documented in COVERAGE.md round 7)
+#: nothing to cut
 PANEL_TIME_BOUNDS: dict[str, tuple[str | None, str | None]] = {
     "panel_indicator_series": ("2024-01-05 00:00:00", "2024-01-20 00:00:00"),
     "panel_candlestick": ("2024-01-05 00:00:00", "2024-01-20 00:00:00"),
@@ -1120,7 +1120,7 @@ QUERIES["panel_price_series_serve"] = q_panel_price_series_serve
 # skip-and-serve twins for the TIME-BOUNDED panel families (the zone map
 # has a range to cut); the symbol-only panels serve through the same
 # store via run_panel_sharded with Hive pruning alone — proven by pytest
-# equality, not separate registry rows (COVERAGE.md round 7)
+# equality, not separate registry rows
 for _panel in PANEL_TIME_BOUNDS:
     QUERIES[f"{_panel}_sharded"] = _panel_sharded_fn(_panel)
 

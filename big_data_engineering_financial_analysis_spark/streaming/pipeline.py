@@ -24,16 +24,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from big_data_engineering_financial_analysis_spark.streaming.state import (
     N_BUCKETS,
-    STATE_DDL,
-    SymbolState,
     bucket_state_ddl,
     enriched_ddl,
     process_bucket,
-    process_group,
 )
 
 #: enrich_stream's grouping column; dropped before the kernel runs, so it
@@ -226,70 +222,4 @@ def write_parquet_sink(df: DataFrame, path: str, checkpoint: str, time_col: str 
         .option("checkpointLocation", checkpoint)
         .partitionBy("dt")
         .outputMode("append")
-    )
-
-
-def enrich_stream_tws(
-    candles: DataFrame,
-    symbol_col: str = "stock_symbol",
-    time_col: str = "local_time",
-    close_col: str = "close",
-) -> DataFrame:
-    """`transformWithStateInPandas` variant of :func:`enrich_stream`.
-
-    Same per-key indicator state machine (streaming/state.py) on Spark 4's
-    arbitrary-state API: state lives in a typed ValueState instead of the
-    applyInPandasWithState tuple, which buys per-state-variable TTLs,
-    multiple state variables per key, and timers when the pipeline needs
-    them.  Its state is per symbol (:func:`..state.process_group`)
-    where ``enrich_stream``'s is per bucket; both run the same kernel
-    loop, so output is identical row for row.
-
-    Environment note: the TWS state-server protocol needs
-    ``google.protobuf`` and the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``); the parity test is
-    skipped where protobuf is absent (this build container).
-    ``enrich_stream`` (applyInPandasWithState) is the default path and has
-    no such dependency.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import StructType
-
-    out_schema = enriched_ddl(candles.schema)
-    state_schema = StructType.fromDDL(STATE_DDL)
-
-    class EnrichProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("indicators", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            if self._state.exists():
-                st = SymbolState.from_tuple(self._state.get())
-            else:
-                st = SymbolState()
-            # concat-before-sort, same multi-chunk hazard as enrich_stream
-            chunks = [p for p in rows if len(p)]
-            if not chunks:
-                self._state.update(st.to_tuple())
-                return
-            out = process_group(
-                st, pd.concat(chunks, ignore_index=True), time_col, close_col
-            )
-            self._state.update(st.to_tuple())
-            if len(out):
-                yield out
-
-        def close(self) -> None:
-            pass
-
-    return candles.groupBy(symbol_col).transformWithStateInPandas(
-        statefulProcessor=EnrichProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="None",
     )

@@ -31,9 +31,8 @@ symbols, each with its state tuple.  Spark's ``applyInPandasWithState``
 then frames one group per bucket per micro-batch — decoding the state,
 slicing Arrow into pandas, encoding the state — instead of one per
 symbol, at about 5 ms a group on a 4-core host.  A NULL symbol is a key of its own
-inside its bucket.  ``enrich_stream_tws`` and the registry's
-``q_enrich_incremental`` still keep one state per symbol
-(:func:`process_group`).
+inside its bucket.  The registry's ``q_enrich_incremental`` still
+keeps one state per symbol (:func:`process_group`).
 
 The arithmetic is the DuckDB ``ENRICHED_CTE`` oracle's (plans/registry.py)
 expression by expression: the 5- and 10-row windows summed in event order

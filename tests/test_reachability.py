@@ -1,0 +1,124 @@
+"""Dead-code guard: every module of the package is reached by a static
+import walk from the pipeline's entry points.
+
+The walk reads each module's source with ``ast`` and follows every
+``import``/``from ... import`` in it, function-level imports included,
+plus the parent packages a dotted import loads.  A module that no entry
+point reaches is code nothing runs: delete it rather than grow around it.
+
+``LEGACY_UNREACHED`` names the modules that no entry point reaches yet
+but that keep tests of their own; they await deletion with those tests.
+The list may only shrink: a new unreached module fails the guard, and so
+does a listed one that is deleted or becomes reachable until it leaves
+the list.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = "big_data_engineering_financial_analysis_spark"
+
+#: the batch job, the CLI and query contract, the streaming job, the REST
+#: server and the ingest/egress adapters
+ENTRY_POINTS = [
+    "__spark_entry__",
+    f"{PKG}.__main__",
+    f"{PKG}.pipeline",
+    f"{PKG}.streaming.pipeline",
+    f"{PKG}.plans.registry",
+    f"{PKG}.plans.http_api",
+    f"{PKG}.plans.analytics_ext",
+    f"{PKG}.sources.kafka",
+    f"{PKG}.sources.ilp",
+    f"{PKG}.sources.rest_poller",
+    f"{PKG}.sources.jdbc",
+    f"{PKG}.sources.feeder",
+]
+
+LEGACY_UNREACHED = {
+    f"{PKG}.{name}"
+    for name in [
+        "operators.audit",
+        "operators.export_manifest",
+        "operators.webdataset",
+        "sources.bucketed",
+        "sources.csvsrc",
+        "sources.jsonl",
+        "sources.tbl",
+        "streaming.bandstore",
+        "streaming.corpus",
+        "streaming.dataset_sink",
+        "streaming.packing",
+        "streaming.rollup",
+        "streaming.state_adx",
+        "streaming.state_atr",
+        "streaming.state_ha",
+        "streaming.state_macd",
+    ]
+}
+
+
+def _source(name: str) -> Path | None:
+    path = ROOT.joinpath(*name.split("."))
+    if (path / "__init__.py").is_file():
+        return path / "__init__.py"
+    if path.with_suffix(".py").is_file():
+        return path.with_suffix(".py")
+    return None
+
+
+def _imported_names(name: str, source: Path):
+    """Every dotted name an import statement in ``source`` may load:
+    ``from a import b`` yields ``a`` and ``a.b`` (``b`` may be a module)."""
+    package = name.split(".") if source.name == "__init__.py" else name.split(".")[:-1]
+    for node in ast.walk(ast.parse(source.read_text())):
+        if isinstance(node, ast.Import):
+            yield from (alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = package[: len(package) - node.level + 1]
+                module = ".".join(base + ([node.module] if node.module else []))
+            else:
+                module = node.module
+            yield module
+            yield from (f"{module}.{alias.name}" for alias in node.names)
+
+
+def reachable_modules() -> set[str]:
+    seen: set[str] = set()
+    todo = list(ENTRY_POINTS)
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        source = _source(name)
+        if source is None:
+            continue
+        seen.add(name)
+        parts = name.split(".")
+        todo += [".".join(parts[:i]) for i in range(1, len(parts))]
+        todo += [
+            m for m in _imported_names(name, source) if m == PKG or m.startswith(PKG + ".")
+        ]
+    return seen
+
+
+def package_modules() -> set[str]:
+    out = set()
+    for path in (ROOT / PKG).rglob("*.py"):
+        parts = path.relative_to(ROOT).with_suffix("").parts
+        out.add(".".join(parts[:-1] if parts[-1] == "__init__" else parts))
+    return out
+
+
+def test_every_package_module_is_reached_from_an_entry_point():
+    unreached = package_modules() - reachable_modules() - LEGACY_UNREACHED
+    assert not unreached, f"{len(unreached)} modules no entry point imports: {sorted(unreached)}"
+
+
+def test_legacy_unreached_list_only_shrinks():
+    stale = LEGACY_UNREACHED - (package_modules() - reachable_modules())
+    assert not stale, f"deleted or now reached, drop from LEGACY_UNREACHED: {sorted(stale)}"

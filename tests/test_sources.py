@@ -96,6 +96,39 @@ def test_pipeline_cli_batch(spark, tmp_path, capsys):
     assert "dt" in stored.columns and stored.count() > 0
 
 
+def test_pipeline_batch_over_kafka_parsed_candles(spark):
+    """Candles off the Kafka wire carry no ``event_id``; every panel runs
+    over their enrichment, and the latest-signal panel resolves a time tie
+    on the columns it selects."""
+    from big_data_engineering_financial_analysis_spark.pipeline import run_batch
+    from big_data_engineering_financial_analysis_spark.plans import dashboard
+    from big_data_engineering_financial_analysis_spark.sources.kafka import parse_candle_json
+
+    def candle(symbol, minute, close):
+        return json.dumps(
+            {"stock_symbol": symbol, "local_time": f"2024-01-10 00:{minute:02d}:00",
+             "open": close, "high": close, "low": close, "close": close, "volume": 1.0}
+        )
+
+    wire = [candle(s, m, 100.0 + m % 4) for s in ["1", "2", "3", "4", "42"] for m in range(15)]
+    wire.append(candle("42", 14, 50.0))  # a second candle in the last minute
+    candles = parse_candle_json(spark.createDataFrame([(w,) for w in wire], "value string"))
+    assert "event_id" not in candles.columns
+
+    counts = run_batch(spark, candles=candles)
+    assert set(counts) == set(dashboard.PANEL_SQL)
+    assert counts["panel_price_series"] == 16
+    assert counts["panel_latest_signal"] == 1
+    assert counts["panel_avg_gain_pivot"] == counts["panel_avg_loss_pivot"] == 1
+    latest = spark.sql(dashboard.PANEL_SQL["panel_latest_signal"]).collect()
+    tied = spark.sql(
+        f"SELECT signal FROM {dashboard.VIEW} WHERE stock_symbol = '42' "
+        "AND local_time = TIMESTAMP '2024-01-10 00:14:00'"
+    ).collect()
+    assert len(tied) == 2
+    assert [(r.local_time.minute, r.signal) for r in latest] == [(14, max(r.signal for r in tied))]
+
+
 # ---------------------------------------------------------------------------
 # Real-fetch branch (S1): default_fetch over HTTP against a local stub server
 # ---------------------------------------------------------------------------

@@ -12,7 +12,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pytest
 
 from big_data_engineering_financial_analysis_spark.functions.indicators import enrich
 from big_data_engineering_financial_analysis_spark.schemas import CANDLE_SCHEMA
@@ -128,57 +127,6 @@ def test_enriched_json_has_17_fields(spark):
     payload = json.loads(row.value)
     # NULL indicator fields are dropped by to_json; warm-up rows carry fewer
     assert {"stock_symbol", "local_time", "open", "close", "signal"} <= set(payload)
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (state-server "
-    "protocol), not installed in this container",
-)
-def test_tws_enrich_matches_batch(spark, tmp_path):
-    """transformWithStateInPandas variant: bit-identical to the batch
-    kernel (and therefore to the applyInPandasWithState path) for in-order
-    micro-batches."""
-    from big_data_engineering_financial_analysis_spark.streaming.pipeline import enrich_stream_tws
-
-    src = str(tmp_path / "tws_src")
-    full = feeder.feed_parquet_batches(spark, src, n_batches=3, minutes_per_batch=15)
-
-    # transformWithState requires the RocksDB state store provider
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        streamed = _run_stream_over_files(
-            spark, src, enrich_stream_tws, "tws_out", str(tmp_path / "tws_ckpt")
-        ).toPandas()
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
-    expected = enrich(full).toPandas()
-
-    assert len(streamed) == len(expected)
-    s = streamed.sort_values(["stock_symbol", "local_time"]).reset_index(drop=True)
-    e = expected.sort_values(["stock_symbol", "local_time"]).reset_index(drop=True)
-    for c in NUM_COLS:
-        np.testing.assert_array_equal(
-            s[c].to_numpy(dtype=float), e[c].to_numpy(dtype=float), err_msg=c
-        )
-    assert (s["signal"] == e["signal"]).all()
 
 
 def test_enrich_stream_on_rocksdb_state_store(spark, tmp_path):
