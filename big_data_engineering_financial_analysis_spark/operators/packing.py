@@ -74,8 +74,8 @@ def pack_chunks(
     w = Window.partitionBy("shard").orderBy(id_col)
     # ROWS (not the default RANGE) frame: RANGE gives duplicate (shard, id)
     # rows the SAME cumulative endpos, so both would derive overlapping
-    # startpos and token conservation breaks.  ROWS packs ties sequentially
-    # (matching the streaming twin) — but tie ORDER is nondeterministic, so
+    # startpos and token conservation breaks.  ROWS packs ties sequentially,
+    # but tie ORDER is nondeterministic, so
     # the determinism contract requires unique ids per shard; enforce it
     # in-plan with a lag() over the same window spec (no extra shuffle or
     # sort) folded into assert_true, which fails the job loudly instead of

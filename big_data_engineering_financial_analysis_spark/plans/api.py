@@ -26,7 +26,7 @@ from big_data_engineering_financial_analysis_spark.plans import serving
 from big_data_engineering_financial_analysis_spark.functions.timeutil import trailing_window
 from big_data_engineering_financial_analysis_spark.schemas import API_FIELD_WHITELIST
 
-AGGREGATIONS = ("avg", "highest", "lowest")
+AGGREGATIONS = tuple(serving.AGGREGATIONS)
 
 
 class ValidationError(ValueError):

@@ -73,8 +73,7 @@ def enrich_stream(
         # arrives as several chunks in arbitrary order, and sorting each
         # alone would advance a symbol's last time past later-chunk rows
         # (silently dropped as "late") and feed the EMA/RSI recursion out
-        # of order — the same hazard streaming/packing.pack_stream
-        # documents.
+        # of order.
         chunks = [p for p in pdfs if len(p)]
         if not chunks:
             return
@@ -118,97 +117,6 @@ def dedup_stream(
     if time_col in keys:
         return wm.dropDuplicates(list(keys))
     return wm.dropDuplicatesWithinWatermark(list(keys))
-
-
-def windowed_stats_stream(
-    candles: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    time_col: str = "local_time",
-    symbol_col: str = "stock_symbol",
-) -> DataFrame:
-    """Event-time tumbling aggregation with late-data bound (T4).
-
-    The watermark lets the state store evict closed windows — without it a
-    streaming aggregation retains every window forever (the same unbounded
-    -state failure mode as the reference's global_data, just in the store).
-    """
-    return (
-        candles.withWatermark(time_col, watermark)
-        .groupBy(F.window(time_col, window), symbol_col)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("close").alias("avg_close"),
-            F.max("close").alias("max_close"),
-            F.min("close").alias("min_close"),
-        )
-        .select(
-            F.col("window.start").alias("bucket_start"),
-            symbol_col,
-            "n",
-            "avg_close",
-            "max_close",
-            "min_close",
-        )
-    )
-
-
-def ohlc_stream(
-    ticks: DataFrame,
-    bar: str = "1 minute",
-    watermark: str = "10 minutes",
-    time_col: str = "local_time",
-    symbol_col: str = "stock_symbol",
-    close_col: str = "close",
-) -> DataFrame:
-    """Streaming tick -> OHLC candle resampling (the streaming twin of
-    ``functions.indicators_ext.ohlc_bars``).
-
-    open/close use ``min_by``/``max_by`` on the event timestamp — ordinary
-    aggregates, so they run incrementally in the streaming state store (no
-    per-window buffering of ticks).  Within-timestamp ties resolve
-    arbitrarily here (the state store sees arrival order); the batch twin's
-    (time, id) row_number is the deterministic formulation — use it
-    wherever replay determinism matters more than latency.
-    """
-    return (
-        ticks.withWatermark(time_col, watermark)
-        .groupBy(F.window(time_col, bar), symbol_col)
-        .agg(
-            F.min_by(close_col, time_col).alias("open"),
-            F.max(close_col).alias("high"),
-            F.min(close_col).alias("low"),
-            F.max_by(close_col, time_col).alias("close"),
-            F.count(F.lit(1)).alias("n_ticks"),
-        )
-        .select(
-            F.col("window.start").alias("bucket"), symbol_col,
-            "open", "high", "low", "close", "n_ticks",
-        )
-    )
-
-
-def session_stats_stream(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    time_col: str = "local_time",
-    key_col: str = "stock_symbol",
-) -> DataFrame:
-    """Session-window aggregation (gap-based), the streaming twin of the
-    batch ``analytics_ext.sessionize`` lag+cumsum formulation."""
-    return (
-        events.withWatermark(time_col, watermark)
-        .groupBy(F.session_window(time_col, gap), key_col)
-        .agg(F.count(F.lit(1)).alias("n_events"), F.avg("close").alias("avg_close"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            key_col,
-            "n_events",
-            "avg_close",
-        )
-    )
 
 
 def write_parquet_sink(df: DataFrame, path: str, checkpoint: str, time_col: str = "local_time"):

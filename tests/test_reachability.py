@@ -50,13 +50,10 @@ LEGACY_UNREACHED = {
         "sources.tbl",
         "streaming.bandstore",
         "streaming.corpus",
-        "streaming.dataset_sink",
-        "streaming.packing",
-        "streaming.rollup",
+        "streaming.dataset_sink",  # the data-skipping family's streaming writer; goes with it
         "streaming.state_adx",
         "streaming.state_atr",
         "streaming.state_ha",
-        "streaming.state_macd",
     ]
 }
 

@@ -1,6 +1,6 @@
 """Regression tests for the round-7 review findings: NULL-keyed unique
-checks, NULL-volume oracle parity, compaction crash recovery, rollup
-version pruning, and pandas-path MACD tie determinism."""
+checks, NULL-volume oracle parity, compaction crash recovery, and
+pandas-path MACD tie determinism."""
 
 from __future__ import annotations
 
@@ -90,21 +90,6 @@ def test_compaction_crash_recovery(spark, tmp_path):
     compact_dataset(spark, path, ["lang"], ["doc_id"])  # heals, then compacts
     assert not os.path.exists(path + "._pre_compact")
     assert read_dataset(spark, path).count() == n
-
-
-def test_rollup_prunes_old_versions(spark, tmp_path):
-    from big_data_engineering_financial_analysis_spark.streaming.rollup import RollupSink
-
-    sink = RollupSink(spark, str(tmp_path / "r"), keys=["k"], value_col="v")
-    batch = spark.createDataFrame([("a", 1.0)], "k string, v double")
-    for epoch in range(4):
-        sink(batch, epoch_id=epoch)
-    versions = sorted(
-        d for d in os.listdir(str(tmp_path / "r")) if d.startswith("v")
-    )
-    # only the live version and its predecessor survive
-    assert versions == ["v2", "v3"]
-    assert sink.current().first()["n"] == 4
 
 
 def test_macd_auto_deterministic_under_ties(spark):

@@ -1,42 +1,12 @@
-"""Regression tests for the round-4 advisor findings: macd_stream's
-tie-stable micro-batch pre-sort, the vwap oracle's empty-fold guard,
-empty-table validation reports, and compaction stage-dir orphans."""
+"""Regression tests for the round-4 advisor findings: the vwap oracle's
+empty-fold guard, empty-table validation reports, and compaction
+stage-dir orphans."""
 
 from __future__ import annotations
 
 import os
 
 import pandas as pd
-
-
-def test_macd_stream_presort_preserves_arrival_under_ties():
-    """The update() pre-sort must be STABLE: with 60 rows tied on one
-    timestamp, first-writer-wins must keep the first ARRIVAL, whatever
-    chunking the micro-batch came in."""
-    import datetime as dt
-
-    from big_data_engineering_financial_analysis_spark.streaming.state_macd import (
-        MacdState,
-        process_group,
-    )
-
-    t = dt.datetime(2024, 1, 1)
-    frames = [
-        pd.DataFrame(
-            {
-                "stock_symbol": ["A"] * 30,
-                "local_time": [t] * 30,
-                "close": [float(100 + k * 30 + i) for i in range(30)],
-            }
-        )
-        for k in range(2)
-    ]
-    # the exact expression update() runs (state_macd.py): concat + stable
-    # sort, then the stable-sorting process_group
-    pdf = pd.concat(frames).sort_values("local_time", kind="stable")
-    out = process_group(MacdState(), pdf)
-    assert len(out) == 1
-    assert out.iloc[0]["close"] == 100.0  # first arrival wins, always
 
 
 def test_vwap_oracle_survives_leading_null_volume(spark, tmp_path):

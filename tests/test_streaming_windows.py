@@ -1,97 +1,10 @@
-"""Streaming event-time windows: tumbling aggregation with watermark and
-session windows, driven through the file-source replay harness."""
+"""Streaming drain mode: Trigger.AvailableNow over the file-source replay
+harness."""
 
 from __future__ import annotations
 
 from big_data_engineering_financial_analysis_spark.schemas import CANDLE_SCHEMA
 from big_data_engineering_financial_analysis_spark.sources import feeder
-from big_data_engineering_financial_analysis_spark.streaming.pipeline import (
-    session_stats_stream,
-    windowed_stats_stream,
-)
-
-from pyspark.sql import functions as F
-
-
-def _run(spark, src_dir, transform, name, ckpt, mode="append"):
-    stream = (
-        spark.readStream.schema(CANDLE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        transform(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .outputMode(mode)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
-
-
-def test_tumbling_stream_matches_batch(spark, tmp_path):
-    src = str(tmp_path / "src")
-    full = feeder.feed_parquet_batches(spark, src, n_batches=3, minutes_per_batch=20)
-
-    # append mode emits only watermark-closed windows; with a 10-minute
-    # watermark the final windows stay open, so compare against the batch
-    # result restricted to emitted buckets
-    streamed = _run(
-        spark, src, windowed_stats_stream, "tumbling_out", str(tmp_path / "ck")
-    ).toPandas()
-    assert len(streamed) > 0
-    batch = (
-        full.groupBy(F.window("local_time", "5 minutes"), "stock_symbol")
-        .agg(F.count(F.lit(1)).alias("n"), F.avg("close").alias("avg_close"))
-        .select(F.col("window.start").alias("bucket_start"), "stock_symbol", "n", "avg_close")
-        .toPandas()
-    )
-    merged = streamed.merge(batch, on=["bucket_start", "stock_symbol"], suffixes=("_s", "_b"))
-    assert len(merged) == len(streamed)  # every emitted window exists in batch
-    assert (merged["n_s"] == merged["n_b"]).all()
-    assert (abs(merged["avg_close_s"] - merged["avg_close_b"]) < 1e-9).all()
-
-
-def test_session_stream_runs(spark, tmp_path):
-    src = str(tmp_path / "ssrc")
-    feeder.feed_parquet_batches(spark, src, n_batches=2, minutes_per_batch=10)
-    out = _run(
-        spark, src, session_stats_stream, "session_out", str(tmp_path / "sck")
-    ).toPandas()
-    # 10-minute cadence per symbol < 30-minute gap -> at most one session
-    # per symbol can close; emitted sessions must be non-overlapping per key
-    for _, g in out.groupby("stock_symbol"):
-        g = g.sort_values("session_start")
-        assert (g["session_end"].shift(1).dropna() <= g["session_start"].iloc[1:]).all()
-
-
-def test_ohlc_stream_matches_batch(spark, tmp_path):
-    from big_data_engineering_financial_analysis_spark.functions.indicators_ext import ohlc_bars
-    from big_data_engineering_financial_analysis_spark.streaming.pipeline import ohlc_stream
-
-    src = str(tmp_path / "osrc")
-    full = feeder.feed_parquet_batches(spark, src, n_batches=3, minutes_per_batch=20)
-
-    streamed = _run(
-        spark, src, ohlc_stream, "ohlc_out", str(tmp_path / "ock")
-    ).toPandas()
-    assert len(streamed) > 0
-
-    batch = (
-        ohlc_bars(full, id_col="local_time", volume_col=None)
-        .toPandas()
-        .rename(columns={})
-    )
-    key = ["stock_symbol", "bucket"]
-    merged = streamed.merge(batch, on=key, suffixes=("_s", "_b"))
-    # append mode emits only watermark-closed candles: every emitted candle
-    # must exist in batch with identical OHLC values
-    assert len(merged) == len(streamed)
-    for c in ("open", "high", "low", "close", "n_ticks"):
-        assert (merged[f"{c}_s"] == merged[f"{c}_b"]).all(), c
 
 
 def test_available_now_drains_and_terminates(spark, tmp_path):
