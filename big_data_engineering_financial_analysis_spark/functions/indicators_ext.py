@@ -53,7 +53,9 @@ def _ema_fold(values: Column, alpha: float) -> Column:
     ``ema = prev * (1 - alpha) + x * alpha`` — identical recursion (and
     identical floating-point evaluation order) to pandas
     ``ewm(adjust=False)`` and to the DuckDB ``list_reduce`` oracle.
-    O(history) per row, so O(history²) per key.
+    O(history) per row, so O(history²) per key: sized for the registry's
+    candle frames (at most 99 rows per key in the shipped data), not for
+    long histories.
     """
     beta = 1.0 - alpha
     return F.aggregate(
@@ -137,222 +139,6 @@ def with_macd(
         ),
     )
     return df.withColumn("macd_hist", F.col("macd") - F.col("macd_signal"))
-
-
-def macd_pandas(
-    df: DataFrame,
-    symbol_col: str = "stock_symbol",
-    time_col: str = "local_time",
-    close_col: str = "close",
-    fast: int = 12,
-    slow: int = 26,
-    signal: int = 9,
-    id_col: str | None = "event_id",
-) -> DataFrame:
-    """MACD via per-key Arrow-batched pandas — O(history) per key, the
-    long-history scale path (the HOF fold re-reduces the whole prefix per
-    row: O(history²)).  pandas ``ewm(adjust=False)`` runs the identical
-    seeded recursion as the fold, so outputs are bit-identical; the signal
-    line's leading-NaN prefix (before ``slow`` warms up) contributes
-    nothing, matching the fold over the non-null MACD subsequence."""
-    import pandas as pd  # noqa: F401  (worker-side import)
-
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    out_schema = (
-        f"{out_fields}, ema_{fast} double, ema_{slow} double, "
-        "macd double, macd_signal double, macd_hist double"
-    )
-
-    # match the fold's (time, id) ordering: the default quicksort is
-    # UNSTABLE, so a bare time sort is nondeterministic under timestamp
-    # ties and would break the bit-identical contract with with_macd
-    sort_keys = [time_col] + ([id_col] if id_col else [])
-
-    def compute(pdf):
-        pdf = pdf.sort_values(sort_keys, kind="stable").reset_index(drop=True)
-        close = pdf[close_col]
-        # ignore_na=True mirrors the fold path: collect_list SKIPS nulls,
-        # so the fold reduces the null-free prefix with ADJACENT weights;
-        # pandas' default (ignore_na=False) decays by absolute position
-        # across a gap, breaking macd_auto's bit-identical switch the
-        # moment a series has an interior NULL (adx_pandas already does
-        # this).  macd_signal inherits interior NaNs from min_periods.
-        pdf[f"ema_{fast}"] = close.ewm(
-            span=fast, adjust=False, min_periods=fast, ignore_na=True
-        ).mean()
-        pdf[f"ema_{slow}"] = close.ewm(
-            span=slow, adjust=False, min_periods=slow, ignore_na=True
-        ).mean()
-        pdf["macd"] = pdf[f"ema_{fast}"] - pdf[f"ema_{slow}"]
-        pdf["macd_signal"] = pdf["macd"].ewm(
-            span=signal, adjust=False, min_periods=signal, ignore_na=True
-        ).mean()
-        pdf["macd_hist"] = pdf["macd"] - pdf["macd_signal"]
-        return pdf
-
-    # pin the Arrow stage's parallelism on small inputs (spread_by doc)
-    return spread_by(df, symbol_col).groupBy(symbol_col).applyInPandas(
-        compute, schema=out_schema
-    )
-
-
-#: _metadata_longest bounds (r13 optimization round): the driver-side
-#: probe only engages when the frame's parquet footprint is provably
-#: tiny — at most this many files and this many total rows (footer
-#: counts, no data read).  4M longs of key column ≈ 32 MB for a few ms
-#: of pandas value_counts; anything larger falls through to the Spark
-#: aggregate, so the fast path can never become a driver bottleneck at
-#: the 100 TB target.
-METADATA_PROBE_MAX_FILES = 64
-METADATA_PROBE_MAX_ROWS = 4_000_000
-
-#: Injective column casts through which a per-key row count is
-#: unchanged: distinct inputs stay distinct, so grouping by the cast
-#: output groups exactly the same rows as grouping by the source.
-_INJECTIVE_CASTS = {
-    ("tinyint", "string"), ("smallint", "string"),
-    ("int", "string"), ("bigint", "string"),
-    ("tinyint", "smallint"), ("tinyint", "int"), ("tinyint", "bigint"),
-    ("smallint", "int"), ("smallint", "bigint"), ("int", "bigint"),
-}
-
-
-def _metadata_longest(df: DataFrame, symbol_col: str) -> tuple[int, bool] | None:
-    """Longest per-key row count from parquet footers + a driver-side
-    key-column read — zero Spark jobs — as ``(value, exact)``, or None
-    when it cannot be derived cheaply (any surprise degrades to the
-    Spark aggregate, never the other way).
-
-    The r12 verdict measured the ``*_auto`` routing probe at ~0.12 s per
-    query construction at sf0.1 — all Spark job floor, not aggregation.
-    This fast path walks the OPTIMIZED plan and engages only when the
-    frame is a Project/Filter chain over one parquet relation (no
-    Join/Generate/Aggregate/Union — nothing that can INCREASE per-key
-    counts) AND ``symbol_col`` resolves through the projections to a
-    source column via identity or a provably injective cast
-    (:data:`_INJECTIVE_CASTS` — ``cast(user_id as string)`` in the
-    candle frames), so per-key counts are preserved.  The key column of
-    a bounded frame (:data:`METADATA_PROBE_MAX_ROWS`) is then read with
-    pyarrow and counted driver-side.  With no Filter in the chain the
-    result is EXACT — the same integer the count aggregate returns,
-    computed from the same files; with Filters it is an UPPER BOUND
-    (filters only remove rows), which callers may use only on the safe
-    side of a routing comparison (upper bound <= limit implies the true
-    longest is too).
-    """
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        name = symbol_col
-        exact = True
-        while True:
-            cls = plan.getClass().getSimpleName()
-            if cls == "Filter":
-                exact = False  # footer counts become an upper bound
-                plan = plan.child()
-            elif cls == "Project":
-                exprs = plan.projectList()
-                resolved = None
-                for i in range(exprs.size()):
-                    ne = exprs.apply(i)
-                    if ne.name() != name:
-                        continue
-                    e = ne
-                    if e.getClass().getSimpleName() == "Alias":
-                        e = e.child()
-                    if e.getClass().getSimpleName() == "Cast":
-                        pair = (
-                            e.child().dataType().simpleString(),
-                            e.dataType().simpleString(),
-                        )
-                        if pair not in _INJECTIVE_CASTS:
-                            return None
-                        e = e.child()
-                    if e.getClass().getSimpleName() != "AttributeReference":
-                        return None
-                    resolved = e.name()
-                    break
-                if resolved is None:
-                    return None
-                name = resolved
-                plan = plan.child()
-            elif cls == "LogicalRelation":
-                break
-            else:
-                return None  # Join/Generate/... : counts not provable from footers
-        files = [
-            f[7:] if f.startswith("file://") else f for f in df.inputFiles()
-        ]
-        if not files or len(files) > METADATA_PROBE_MAX_FILES:
-            return None
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        total = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        if total == 0:
-            return None  # empty relation: Spark's max(n) over no groups is NULL
-        if total > METADATA_PROBE_MAX_ROWS:
-            return None
-        col = pq.read_table(files, columns=[name]).column(0)
-        vc = pc.value_counts(col.combine_chunks())
-        longest = max(
-            (int(c.as_py()) for c in vc.field("counts")), default=0
-        )
-        # a NULL key is its own group under Spark's groupBy; some pyarrow
-        # versions exclude nulls from value_counts, so take the max with
-        # the null count either way (if included, it's already <= longest)
-        return max(longest, col.null_count), exact
-    except Exception:  # noqa: BLE001 — introspection is best-effort
-        return None
-
-
-def longest_history(
-    df: DataFrame, symbol_col: str, fold_limit: int | None = None
-) -> int | None:
-    """Longest per-key row count — the shared probe behind every
-    ``*_auto`` fold-vs-pandas routing switch (macd_auto, adx_auto,
-    heikin_ashi_auto).
-
-    Scan-shaped bounded frames take the driver-side parquet-footer probe
-    (:func:`_metadata_longest` — no Spark job, ~ms): EXACT results are
-    returned directly (the identical integer the count aggregate
-    returns); a filtered frame's UPPER BOUND is returned only when the
-    caller supplied its ``fold_limit`` and the bound is at or under it —
-    the one comparison every ``*_auto`` switch makes, where
-    ``upper <= limit`` implies the true longest is too, so routing (and
-    therefore results, bit-identical on both routes anyway) never
-    depends on which probe ran.  Everything else runs the original count
-    aggregate, map-side combined: metadata-sized at any scale."""
-    fast = _metadata_longest(df, symbol_col)
-    if fast is not None:
-        val, exact = fast
-        if exact or (fold_limit is not None and val <= fold_limit):
-            return val
-    return (
-        df.groupBy(symbol_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n"))
-        .first()[0]
-    )
-
-
-def macd_auto(
-    df: DataFrame,
-    symbol_col: str = "stock_symbol",
-    time_col: str = "local_time",
-    id_col: str = "event_id",
-    close_col: str = "close",
-    fold_limit: int = 1000,
-) -> DataFrame:
-    """MACD with automatic path selection: probe the longest per-key history
-    (:func:`longest_history`), fold below ``fold_limit`` rows/key,
-    pandas above.  Both paths are bit-identical (asserted in tests), so
-    the switch only changes the physical plan, never results."""
-    longest = longest_history(df, symbol_col, fold_limit)
-    if longest is not None and longest > fold_limit:
-        return macd_pandas(df, symbol_col, time_col, close_col, id_col=id_col)
-    return with_macd(df, symbol_col, time_col, id_col, close_col)
 
 
 def with_bollinger(

@@ -1,9 +1,9 @@
 """Trend / cross-sectional technical analysis: ADX, Ichimoku, Heikin-Ashi,
 cross-sectional momentum, rolling Sharpe/Sortino, volume profile.
 
-Round-5 widening of the indicator surface beyond
-``functions/indicators_ext.py`` (MACD/Bollinger/stochastic/VWAP/OBV/
-volatility/ATR), with the same design rules:
+Widens the indicator surface beyond ``functions/indicators_ext.py``
+(MACD/Bollinger/stochastic/VWAP/OBV/volatility/ATR), with the same
+design rules:
 
 * one ``PARTITION BY symbol ORDER BY time`` window family per operator —
   a single Exchange, parallelism = #symbols; the only operator that
@@ -14,7 +14,10 @@ volatility/ATR), with the same design rules:
 * recursions (Wilder smoothing, the Heikin-Ashi open) via the same
   ``aggregate()`` HOF fold as ``ema_10`` — identical FP evaluation order
   to the DuckDB ``list_reduce`` oracles;
-* everything JVM-side in whole-stage-codegen-able expressions.
+* everything JVM-side in whole-stage-codegen-able expressions;
+* one implementation per indicator.  The folds re-reduce the whole
+  prefix per row, O(history²) per key: sized for the registry's candle
+  frames (at most 99 rows per key in the shipped data).
 
 Formulas are the standard public ones (Wilder 1978 for DMI/ADX; the
 usual Ichimoku 9/26/52 parameterization).  Wilder's own seeding uses the
@@ -40,12 +43,12 @@ from big_data_engineering_financial_analysis_spark.operators.partitioning import
 from big_data_engineering_financial_analysis_spark.functions.indicators_ext import (
     TRADING_DAYS,
     _ema_fold,
-    longest_history,
 )
 
 
 def _wilder(src: str, n: int, hist) -> Column:
-    """Wilder RMA fold over the non-null prefix, gated at ``n`` values."""
+    """Wilder RMA fold over the non-null prefix, gated at ``n`` values.
+    O(history²) per key (:func:`_ema_fold`)."""
     return F.when(
         F.count(src).over(hist) >= n,
         _ema_fold(F.collect_list(src).over(hist), 1.0 / n),
@@ -115,142 +118,6 @@ def with_adx_dmi(
     return bars.drop("s_plus", "s_minus")
 
 
-def adx_pandas(
-    bars: DataFrame,
-    symbol_col: str = "stock_symbol",
-    time_col: str = "bucket",
-    n: int = 14,
-) -> DataFrame:
-    """ADX/DMI via per-key Arrow-batched pandas — the O(history) scale
-    path (the HOF fold re-reduces the whole prefix per row:
-    O(history²)).  ``ewm(alpha=1/n, adjust=False)`` runs the identical
-    seeded Wilder recursion as the fold; the ADX smoothing uses
-    ``ignore_na=True`` so interior NaN DX values (both DIs zero on a
-    flat stretch) are skipped exactly the way ``collect_list`` skips
-    NULLs — outputs are bit-identical to :func:`with_adx_dmi`
-    (asserted in tests)."""
-    import numpy as np
-    import pandas as pd  # noqa: F401  (worker-side import)
-
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in bars.schema.fields
-    )
-    out_schema = (
-        f"{out_fields}, plus_dm double, minus_dm double, tr double, "
-        "atr double, plus_di double, minus_di double, dx double, adx double"
-    )
-    alpha = 1.0 / n
-
-    def compute(pdf):
-        pdf = pdf.sort_values(time_col, kind="stable").reset_index(drop=True)
-        h, l, c = pdf["high"], pdf["low"], pdf["close"]
-        ph, pl, pc = h.shift(1), l.shift(1), c.shift(1)
-        up, dn = h - ph, pl - l
-        # NaN comparisons are False -> first row falls through to 0.0,
-        # matching the fold's explicit prev-IS-NULL branch
-        pdf["plus_dm"] = np.where((up > dn) & (up > 0), up, 0.0)
-        pdf["minus_dm"] = np.where((dn > up) & (dn > 0), dn, 0.0)
-        tr = pd.concat([h - l, (h - pc).abs(), (l - pc).abs()], axis=1).max(axis=1)
-        pdf["tr"] = tr
-
-        def rma(s):
-            return s.ewm(alpha=alpha, adjust=False, min_periods=n).mean()
-
-        atr, sp, sm = rma(pdf["tr"]), rma(pdf["plus_dm"]), rma(pdf["minus_dm"])
-        pdf["atr"] = atr
-        pdf["plus_di"] = (100.0 * sp) / atr.where(atr != 0.0)
-        pdf["minus_di"] = (100.0 * sm) / atr.where(atr != 0.0)
-        den = (pdf["plus_di"] + pdf["minus_di"]).where(
-            pdf["plus_di"] + pdf["minus_di"] != 0.0
-        )
-        pdf["dx"] = (100.0 * (pdf["plus_di"] - pdf["minus_di"]).abs()) / den
-        pdf["adx"] = pdf["dx"].ewm(
-            alpha=alpha, adjust=False, min_periods=n, ignore_na=True
-        ).mean()
-        return pdf
-
-    # pin the Arrow stage's parallelism on small inputs (spread_by doc)
-    return spread_by(bars, symbol_col).groupBy(symbol_col).applyInPandas(
-        compute, schema=out_schema
-    )
-
-
-def adx_auto(
-    bars: DataFrame,
-    symbol_col: str = "stock_symbol",
-    time_col: str = "bucket",
-    n: int = 14,
-    fold_limit: int = 1000,
-) -> DataFrame:
-    """ADX with automatic path selection (same contract as ``macd_auto``):
-    probe the longest per-key bar history (``longest_history``), fold
-    below ``fold_limit`` bars/key, pandas above.  Both paths are
-    bit-identical, so the switch only changes the physical plan, never
-    results."""
-    longest = longest_history(bars, symbol_col, fold_limit)
-    if longest is not None and longest > fold_limit:
-        return adx_pandas(bars, symbol_col, time_col, n)
-    return with_adx_dmi(bars, symbol_col, time_col, n)
-
-
-def heikin_ashi_pandas(
-    bars: DataFrame,
-    symbol_col: str = "stock_symbol",
-    time_col: str = "bucket",
-) -> DataFrame:
-    """Heikin-Ashi via per-key Arrow-batched pandas — O(history) per key.
-
-    The ha_open recursion runs as an explicit ``(acc + x) / 2.0`` loop —
-    the *same* IEEE operation order as the ``aggregate()`` fold (an
-    ``ewm(alpha=0.5)`` would compute ``0.5*acc + 0.5*x``, which can
-    differ by 1 ulp) — so outputs are bit-identical to
-    :func:`with_heikin_ashi` (asserted in tests)."""
-    import numpy as np
-    import pandas as pd  # noqa: F401  (worker-side import)
-
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in bars.schema.fields
-    )
-    out_schema = (
-        f"{out_fields}, ha_close double, ha_open double, "
-        "ha_high double, ha_low double"
-    )
-
-    def compute(pdf):
-        pdf = pdf.sort_values(time_col, kind="stable").reset_index(drop=True)
-        o, h, l, c = (pdf[k].to_numpy() for k in ("open", "high", "low", "close"))
-        ha_close = (o + h + l + c) / 4.0
-        ha_open = np.empty_like(ha_close)
-        if len(ha_open):
-            ha_open[0] = (o[0] + c[0]) / 2.0
-            for i in range(1, len(ha_open)):
-                ha_open[i] = (ha_open[i - 1] + ha_close[i - 1]) / 2.0
-        pdf["ha_close"] = ha_close
-        pdf["ha_open"] = ha_open
-        pdf["ha_high"] = np.maximum.reduce([h, ha_open, ha_close])
-        pdf["ha_low"] = np.minimum.reduce([l, ha_open, ha_close])
-        return pdf
-
-    # pin the Arrow stage's parallelism on small inputs (spread_by doc)
-    return spread_by(bars, symbol_col).groupBy(symbol_col).applyInPandas(
-        compute, schema=out_schema
-    )
-
-
-def heikin_ashi_auto(
-    bars: DataFrame,
-    symbol_col: str = "stock_symbol",
-    time_col: str = "bucket",
-    fold_limit: int = 1000,
-) -> DataFrame:
-    """Heikin-Ashi with automatic fold/pandas path selection — same
-    probe-and-switch contract as :func:`adx_auto`."""
-    longest = longest_history(bars, symbol_col, fold_limit)
-    if longest is not None and longest > fold_limit:
-        return heikin_ashi_pandas(bars, symbol_col, time_col)
-    return with_heikin_ashi(bars, symbol_col, time_col)
-
-
 def with_ichimoku(
     bars: DataFrame,
     symbol_col: str = "stock_symbol",
@@ -313,7 +180,9 @@ def with_heikin_ashi(
     letting ``list_reduce`` treat it as the init element.
 
     ha_high/ha_low fold the raw extremes against the smoothed open/close.
-    One window family keyed on the symbol — a single Exchange.
+    One window family keyed on the symbol — a single Exchange.  The fold
+    re-reduces the prefix per row, O(history²) per key: sized for the
+    registry's ≤ 99 bars per key.
     """
     # pin window parallelism on small inputs (spread_by doc)
     bars = spread_by(bars, symbol_col)

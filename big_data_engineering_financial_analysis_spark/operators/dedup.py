@@ -1347,7 +1347,7 @@ def connected_components_star(
     union-find over the collected edges — same (node, min-reachable-id)
     contract, labels returned as a LocalRelation whose downstream scans
     are free.  This is the engine's standing model-sized-data pattern
-    (MMR's driver-side greedy steps, the ``*_auto`` probe-and-route):
+    (MMR's driver-side greedy steps):
     a duplicate-pair graph is SPARSE relative to its corpus — 100k edges
     is ~1.6 MB collected — so real workloads at this size are latency-
     bound on fixed per-cycle job overhead, not data.  Above the

@@ -119,21 +119,6 @@ def pq_codes(vec: Column, codebooks: list[list[list[float]]]) -> Column:
     return F.transform(_cb_literal(codebooks), code_for)
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: list[list[list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes) — the compressed form you persist at ingest."""
-    cb = codebooks or pq_codebooks(DEFAULT_M, DEFAULT_CODES, 64 // DEFAULT_M)
-    c = corpus.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("vec")
-    )
-    c = _normalized(c)
-    return c.select(F.col(id_col), pq_codes(F.col("vec"), cb).alias("codes"))
-
-
 def pq_refit_codebooks(
     corpus: DataFrame,
     m: int = DEFAULT_M,

@@ -63,7 +63,7 @@ _KEY = ["event_id", "stock_symbol", "local_time", "close"]
 
 
 def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = ix.macd_auto(_candles(spark, sf_dir).drop("volume"))
+    out = ix.with_macd(_candles(spark, sf_dir).drop("volume"))
     cols = ["ema_12", "ema_26", "macd", "macd_signal", "macd_hist"]
     return _round6(out.select(*_KEY, *cols), cols)
 

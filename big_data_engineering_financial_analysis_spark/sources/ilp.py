@@ -11,7 +11,10 @@ of hammering one driver-side connection per row.
 
 Batch path: :func:`write_ilp` (``foreachPartition``).  Streaming path:
 :func:`ilp_stream_writer` (``foreachBatch`` reusing the same partition
-sender, preserving exactly-once per epoch via the caller's checkpoint).
+sender).  Streaming delivery is at-least-once: an epoch that fails after
+sending is not committed to the caller's checkpoint, so the restart
+re-sends all of its lines, and QuestDB's dedup on (timestamp, symbol)
+makes the replay idempotent.
 """
 
 from __future__ import annotations

@@ -110,13 +110,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Mapping[str, DataFrame]:
     return _LazyTables(spark, sf_dir)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for ``spark.sql`` queries."""
-    tables = load_tables(spark, sf_dir)
-    for name in TABLES:
-        tables[name].createOrReplaceTempView(name)
-
-
 def candles_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map the synthetic ``events`` table onto the candle-stream shape.
 

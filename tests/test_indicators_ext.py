@@ -245,32 +245,6 @@ def test_rolling_corr_constant_side_null(spark):
     assert out["corr"].isna().all()  # zero variance -> nullif guard
 
 
-def test_macd_pandas_bit_identical_to_fold(spark):
-    import numpy as np
-
-    # 1500 rows/key: above the fold limit, so macd_auto routes to pandas;
-    # compare against the fold on the same data — must be bit-identical
-    closes = [100 + 10 * math.sin(i / 7.0) + 0.01 * i for i in range(1500)]
-    df = _candles(spark, closes)
-    fold = ix.with_macd(df).toPandas().sort_values("event_id").reset_index(drop=True)
-    pdas = (
-        ix.macd_pandas(df.drop("volume"))
-        .toPandas()
-        .sort_values("event_id")
-        .reset_index(drop=True)
-    )
-    auto = (
-        ix.macd_auto(df.drop("volume"))
-        .toPandas()
-        .sort_values("event_id")
-        .reset_index(drop=True)
-    )
-    for c in ("ema_12", "ema_26", "macd", "macd_signal", "macd_hist"):
-        fa, pa, aa = fold[c].to_numpy(), pdas[c].to_numpy(), auto[c].to_numpy()
-        assert ((fa == pa) | (np.isnan(fa) & np.isnan(pa))).all(), c
-        assert ((fa == aa) | (np.isnan(fa) & np.isnan(aa))).all(), c
-
-
 def test_vwap_obv_null_volume_policy(spark):
     # corrupt/unparseable volume -> NULL: the bar contributes nothing to
     # VWAP (sum skips NULLs) and nothing to OBV (signed term is NULL)

@@ -11,11 +11,16 @@ but that keep tests of their own; they await deletion with those tests.
 The list may only shrink: a new unreached module fails the guard, and so
 does a listed one that is deleted or becomes reachable until it leaves
 the list.
+
+A cut must not break the package's importers outside it either: every
+package module and name that the benchmark, the tools, ``bench.py`` or
+``__spark_entry__.py`` imports must import and resolve.
 """
 
 from __future__ import annotations
 
 import ast
+import importlib
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -38,6 +43,10 @@ ENTRY_POINTS = [
     f"{PKG}.sources.feeder",
 ]
 
+#: the files outside the package that import it: the pipeline benchmark,
+#: the operator tools, the legacy CLI and the query contract
+IMPORTERS = ["perfbench/**/*.py", "tools/*.py", "bench.py", "__spark_entry__.py"]
+
 LEGACY_UNREACHED = {
     f"{PKG}.{name}"
     for name in [
@@ -51,11 +60,12 @@ LEGACY_UNREACHED = {
         "streaming.bandstore",
         "streaming.corpus",
         "streaming.dataset_sink",  # the data-skipping family's streaming writer; goes with it
-        "streaming.state_adx",
-        "streaming.state_atr",
-        "streaming.state_ha",
     ]
 }
+
+
+def _ours(module: str) -> bool:
+    return module == PKG or module.startswith(PKG + ".")
 
 
 def _source(name: str) -> Path | None:
@@ -97,9 +107,7 @@ def reachable_modules() -> set[str]:
         seen.add(name)
         parts = name.split(".")
         todo += [".".join(parts[:i]) for i in range(1, len(parts))]
-        todo += [
-            m for m in _imported_names(name, source) if m == PKG or m.startswith(PKG + ".")
-        ]
+        todo += [m for m in _imported_names(name, source) if _ours(m)]
     return seen
 
 
@@ -119,3 +127,28 @@ def test_every_package_module_is_reached_from_an_entry_point():
 def test_legacy_unreached_list_only_shrinks():
     stale = LEGACY_UNREACHED - (package_modules() - reachable_modules())
     assert not stale, f"deleted or now reached, drop from LEGACY_UNREACHED: {sorted(stale)}"
+
+
+def _package_imports(path: Path):
+    """``(module, name)`` for every package import in ``path``, function
+    level included; ``name`` is None for a plain ``import module``."""
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            yield from ((alias.name, None) for alias in node.names if _ours(alias.name))
+        elif isinstance(node, ast.ImportFrom) and not node.level and _ours(node.module or ""):
+            yield from ((node.module, alias.name) for alias in node.names)
+
+
+def test_imports_from_outside_the_package_resolve():
+    files = sorted({path for pattern in IMPORTERS for path in ROOT.glob(pattern)})
+    imports = [(path, m, n) for path in files for m, n in _package_imports(path)]
+    assert imports, "no package imports found: the IMPORTERS globs are stale"
+    broken = []
+    for path, module, name in imports:
+        try:
+            mod = importlib.import_module(module)
+            if name is not None and not hasattr(mod, name):
+                importlib.import_module(f"{module}.{name}")  # ``b`` may be a submodule
+        except ImportError as exc:
+            broken.append(f"{path.relative_to(ROOT)}: {module} {name or ''}: {exc}")
+    assert not broken, "\n".join(broken)

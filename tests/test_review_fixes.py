@@ -1,6 +1,5 @@
 """Regression tests for the round-7 review findings: NULL-keyed unique
-checks, NULL-volume oracle parity, compaction crash recovery, and
-pandas-path MACD tie determinism."""
+checks, NULL-volume oracle parity and compaction crash recovery."""
 
 from __future__ import annotations
 
@@ -90,34 +89,3 @@ def test_compaction_crash_recovery(spark, tmp_path):
     compact_dataset(spark, path, ["lang"], ["doc_id"])  # heals, then compacts
     assert not os.path.exists(path + "._pre_compact")
     assert read_dataset(spark, path).count() == n
-
-
-def test_macd_auto_deterministic_under_ties(spark):
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from big_data_engineering_financial_analysis_spark.functions.indicators_ext import (
-        macd_auto,
-        with_macd,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-    # 1100 rows (> fold_limit -> pandas path) with a timestamp TIE pair
-    rows = [
-        {
-            "event_id": i,
-            "stock_symbol": "A",
-            "local_time": t0 + dt.timedelta(minutes=min(i, 500)),  # ties at 500+
-            "close": 100.0 + (i % 37),
-        }
-        for i in range(1100)
-    ]
-    df = spark.createDataFrame(rows)
-    fold = with_macd(df).toPandas().sort_values("event_id").reset_index(drop=True)
-    auto = macd_auto(df).toPandas().sort_values("event_id").reset_index(drop=True)
-    import numpy as np
-
-    for c in ("macd", "macd_signal"):
-        fa, aa = fold[c].to_numpy(), auto[c].to_numpy()
-        assert ((fa == aa) | (np.isnan(fa) & np.isnan(aa))).all(), c

@@ -429,10 +429,11 @@ def test_asof_tolerance_is_inclusive_at_fractional_seconds(spark):
 
 
 def test_macd_fold_and_pandas_agree_with_interior_null(spark):
-    """macd_auto's bit-identical switch must hold when a series has an
-    interior NULL close: the fold skips NULLs with adjacent weights
-    (collect_list), so pandas needs ignore_na=True."""
+    """An interior NULL close: the fold skips NULLs with adjacent weights
+    (collect_list), exactly pandas' ``ewm(adjust=False, ignore_na=True)``,
+    the independent reference here."""
     import numpy as np
+    import pandas as pd
 
     from big_data_engineering_financial_analysis_spark.functions import indicators_ext as ix
 
@@ -449,15 +450,15 @@ def test_macd_fold_and_pandas_agree_with_interior_null(spark):
         .toPandas()
         .sort_values("event_id")
     )
-    b = (
-        ix.macd_pandas(df)
-        .select("event_id", "macd_signal")
-        .toPandas()
-        .sort_values("event_id")
-    )
+    close = pd.Series([r[3] for r in rows], dtype=float)  # rows are in (time, id) order
+
+    def ema(s, span):
+        return s.ewm(span=span, adjust=False, min_periods=span, ignore_na=True).mean()
+
+    macd = ema(close, 12) - ema(close, 26)
     np.testing.assert_array_equal(
         a["macd_signal"].to_numpy(dtype=float),
-        b["macd_signal"].to_numpy(dtype=float),
+        ema(macd, 9).to_numpy(dtype=float),
     )
 
 

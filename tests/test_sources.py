@@ -303,6 +303,59 @@ def test_ilp_stream_writer_foreachbatch(spark, tcp_sink, tmp_path):
     assert b"stock_data,s=X close=1.0 1\n" in b"".join(received)
 
 
+def test_ilp_stream_writer_replays_a_failed_epoch_whole(spark, tcp_sink, tmp_path):
+    """At-least-once: a batch that fails after its lines were sent is not
+    committed, so a restart from the same checkpoint re-sends that whole
+    epoch and nothing else."""
+    import collections
+    import os
+    import time as _t
+
+    from big_data_engineering_financial_analysis_spark.sources import ilp
+
+    host, port, received = tcp_sink
+    src = tmp_path / "in"
+    src.mkdir()
+    epochs = [[f"stock_data,s=E{e} close={i}.0 {e}{i}" for i in range(3)] for e in (0, 1)]
+    for e, lines in enumerate(epochs):
+        path = src / f"b{e}.json"
+        path.write_text("".join(json.dumps({"line": line}) + "\n" for line in lines))
+        os.utime(path, (1_700_000_000 + e, 1_700_000_000 + e))  # file order = epoch order
+
+    send = ilp.ilp_stream_writer(host, port)
+    crashed = []
+
+    def send_then_crash_once(batch_df, epoch_id):
+        send(batch_df, epoch_id)
+        if epoch_id == 1 and not crashed:
+            crashed.append(epoch_id)
+            raise RuntimeError("crash after epoch 1 was sent")
+
+    def start():
+        return (
+            spark.readStream.schema("line string")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+            .writeStream.foreachBatch(send_then_crash_once)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    with pytest.raises(Exception, match="crash after epoch 1"):
+        start().awaitTermination(120)
+    assert crashed == [1]
+    start().awaitTermination(120)
+
+    want = collections.Counter(epochs[0] + epochs[1] * 2)
+    for _ in range(100):
+        if sum(chunk.count(b"\n") for chunk in received) >= sum(want.values()):
+            break
+        _t.sleep(0.05)
+    got = collections.Counter(b"".join(received).decode().splitlines())
+    assert got == want
+
+
 def test_load_tables_mapping_reflects_tables_without_reading(spark, tmp_path):
     """Keys, ``in``, ``len()``, ``get()`` and iteration answer from
     TABLES before any access; only asking for a value reads its table."""
