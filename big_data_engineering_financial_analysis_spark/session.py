@@ -11,14 +11,28 @@ chosen to survive that scale-up:
 - Session timezone pinned UTC so timestamps compare bit-for-bit with
   DuckDB/parquet naive timestamps (the reference keeps naive Asia/Tehran
   local times end-to-end; see functions/timeutil.py for the tz helpers).
-- shuffle.partitions defaults to the local core count; on a real cluster
-  AQE coalescing makes the initial number mostly irrelevant as long as it
-  is not too small.
+- The local core count is ``$SPARK_GRAFT_CPUS`` when set, else the CPUs
+  this process may run on (``os.sched_getaffinity``), and
+  shuffle.partitions defaults to it.  A stream's state-partition count is
+  fixed at its first start, and on a 4-core host 8 state partitions
+  instead of 4 raised ``stream_live``'s lag p50 from 1.8 to 2.9 s.  On a
+  real cluster AQE coalescing makes the initial number mostly irrelevant
+  as long as it is not too small.
 - The driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` when set, else a quarter
   of the host's physical RAM capped at 48 GB: in local mode the driver
   JVM is the whole engine, and it shares the host with the Python
   workers, so a fixed 48g default gets the JVM OOM-killed on a 16 GB
   host.
+- Python workers fork from ``worker_daemon`` instead of
+  ``pyspark.daemon``: it is the same daemon, except that a task's
+  ``importlib.invalidate_caches()`` no longer makes every zipimporter
+  into Spark's own archives (pyspark.zip, py4j, the spark-core jar)
+  re-read their directories.  That re-read cost 120-300 ms of every
+  Python task on a 4-core host, and a ``stream_live`` micro-batch runs 8
+  such tasks.  The JVM starts the daemon with ``python -m``, so the
+  session puts the package's root on the workers' ``PYTHONPATH``; without
+  it every Python task of a Spark driver started outside the checkout
+  would fail.
 """
 
 from __future__ import annotations
@@ -35,7 +49,7 @@ MAX_DEFAULT_DRIVER_MB = 48 * 1024
 
 
 def _local_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def physical_ram_mb() -> int:
@@ -58,6 +72,11 @@ def get_spark(
     ``cpus`` only affects a fresh JVM (local mode master string); on an
     existing session only SQL confs are (re)applied.
     """
+    # not a module-level import: the daemon's ``python -m`` start imports
+    # this package first, and runpy warns when that has already loaded the
+    # module it is about to run as __main__
+    from big_data_engineering_financial_analysis_spark import worker_daemon
+
     cpus = cpus or _local_cpus()
     shuffle_partitions = shuffle_partitions or cpus
 
@@ -73,6 +92,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.fallback.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem())
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", worker_daemon.__name__)
+        # the JVM starts that daemon with ``python -m``: put this package's
+        # root on the local workers' path, whatever their working directory
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.dirname(os.path.abspath(worker_daemon.__file__))))
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # the synthetic events table stores TIMESTAMP(NANOS) which Spark has
         # no native type for; read as long and convert (sources/parquet.py)

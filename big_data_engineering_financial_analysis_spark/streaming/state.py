@@ -30,7 +30,10 @@ row per bucket (:func:`bucket_state_ddl`): an array of the bucket's
 symbols, each with its state tuple.  Spark's ``applyInPandasWithState``
 then frames one group per bucket per micro-batch — decoding the state,
 slicing Arrow into pandas, encoding the state — instead of one per
-symbol, at about 5 ms a group on a 4-core host.  A NULL symbol is a key of its own
+symbol, which cost ~6 s a 1,000-symbol micro-batch on a 4-core host.
+Per bucket, the group framing is no longer the fixed cost: the setup of
+each Python task was (120-300 ms a task, until ``worker_daemon``
+stopped every task re-reading Spark's own zips).  A NULL symbol is a key of its own
 inside its bucket.  The registry's ``q_enrich_incremental`` still
 keeps one state per symbol (:func:`process_group`).
 

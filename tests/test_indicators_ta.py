@@ -276,10 +276,13 @@ def _adx_reference(ohlc, n=14):
     return pdf
 
 
-def test_adx_interior_nan_dx_parity(spark):
-    # a flat stretch zeroes the DMs and TR mid-series, and DX is NULL
-    # until ATR warms up; the ADX fold must match the pandas reference
-    # exactly on both
+def test_adx_flat_stretch_parity(spark):
+    # a flat stretch zeroes the raw DMs and TR mid-series; the ADX fold
+    # must match the pandas reference exactly through it.  DX is NULL only
+    # in the leading warm-up rows: the Wilder-smoothed DMs stay positive
+    # through the flat stretch, and the fold cannot reach an interior NULL
+    # DX (both smoothed DMs, or ATR, exactly 0 after a non-zero value) on
+    # a series this short
     ohlc = _synthetic_ohlc(20) + [(100.0, 100.0, 100.0, 100.0)] * 10 + _synthetic_ohlc(15)
     bars = _bars(spark, ohlc)
     cols = ["dx", "adx"]
