@@ -2,12 +2,11 @@
 
 ``corpus_prep`` (plans/registry_datapipe.py) answers "which documents
 survive?"; at 100 TB the question operators actually debug is the other
-one — "why did THIS document (or 40% of this crawl) disappear?".  The
-retired ``corpus_funnel`` row gives per-stage counts; this module gives
-the per-ROW answer: every input document labeled with the FIRST gate
-that dropped it (funnel precedence — later stages only ever saw earlier
-survivors), or NULL for survivors, with its language/quality features
-attached either way.
+one — "why did THIS document (or 40% of this crawl) disappear?".  This
+module gives the per-ROW answer: every input document labeled with the
+FIRST gate that dropped it (funnel precedence — later stages only ever
+saw earlier survivors), or NULL for survivors, with its language/quality
+features attached either way.
 
 One pass over the corpus: the gate features are the same row-local
 expressions the pipeline computes (here computed for ALL rows — the

@@ -11,9 +11,9 @@ The reference serves three POST endpoints through Django
 
 This module is the engine-side equivalent: validated request dicts in,
 response dicts (the reference's JSON shapes) out, with Catalyst doing the
-aggregation.  A web layer (Flask/Django/FastAPI) would be a thin wrapper
-over these three functions; none ships here because HTTP serving is outside
-the engine (and the container has no web stack).
+aggregation.  The web layer is a thin wrapper over these three functions:
+``plans/http_api.py`` serves them over the standard library's
+``http.server``.
 """
 
 from __future__ import annotations
@@ -33,6 +33,10 @@ class ValidationError(ValueError):
     """Request rejected — mirrors the serializer 400s (serializers.py:15-31)."""
 
 
+def _is_symbol(value) -> bool:
+    return isinstance(value, str) and value != ""
+
+
 def _validate(request: dict, enriched_cols: list[str]) -> dict:
     agg = request.get("aggregation")
     if agg not in AGGREGATIONS:
@@ -42,10 +46,11 @@ def _validate(request: dict, enriched_cols: list[str]) -> dict:
     if field not in whitelist:
         raise ValidationError(f"field must be one of {sorted(whitelist)}")
     period = request.get("period_minutes", 60)
-    if not isinstance(period, int) or period <= 0:
+    # bool is an int subclass: reject ``true`` before the int check
+    if isinstance(period, bool) or not isinstance(period, int) or period <= 0:
         raise ValidationError("period_minutes must be a positive int")
-    if not request.get("stock_symbol"):
-        raise ValidationError("stock_symbol is required")
+    if not _is_symbol(request.get("stock_symbol")):
+        raise ValidationError("stock_symbol must be a non-empty string")
     return {"aggregation": agg, "field": field, "period_minutes": period,
             "stock_symbol": request["stock_symbol"]}
 
@@ -90,8 +95,8 @@ def handle_summarize_multiple(enriched: DataFrame, request: dict, now: datetime)
     """POST /api/summarize/multiple/ — ONE grouped aggregate instead of the
     reference's per-symbol query loop (views.py:281-289)."""
     symbols = request.get("stock_symbols")
-    if not symbols or not isinstance(symbols, list):
-        raise ValidationError("stock_symbols must be a non-empty list")
+    if not symbols or not isinstance(symbols, list) or not all(map(_is_symbol, symbols)):
+        raise ValidationError("stock_symbols must be a non-empty list of non-empty strings")
     req = _validate({**request, "aggregation": "avg", "stock_symbol": symbols[0]}, enriched.columns)
     start, end = trailing_window(now, req["period_minutes"])
     rows = serving.summarize_multiple(enriched, symbols, start, end).collect()

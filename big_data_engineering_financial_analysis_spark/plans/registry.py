@@ -110,25 +110,11 @@ enriched AS (
 def _enriched(spark: SparkSession, sf_dir: str, symbols: list[str] | None = None) -> DataFrame:
     """Enriched events-as-candles, optionally pruned to a symbol set.
 
-    The symbol predicate is applied on the native int ``user_id`` BEFORE
-    the string mapping: a filter on ``CAST(user_id AS STRING)`` cannot be
-    pushed into the parquet scan (cast blocks source filters), whereas
-    ``user_id IN (...)`` reaches PushedFilters — at scale that is a full
-    scan versus reading one symbol's row groups.  Pre-filtering on the
-    grouping key commutes with the per-symbol enrichment, so results are
-    identical to filtering afterwards.
+    The prune runs in the scan (see :func:`candles_from_events`);
+    pre-filtering on the grouping key commutes with the per-symbol
+    enrichment, so results are identical to filtering afterwards.
     """
-    ev = load_table(spark, sf_dir, "events")
-    if symbols is not None:
-        ev = ev.filter(F.col("user_id").isin([int(s) for s in symbols]))
-    candles = ev.select(
-        F.col("event_id"),
-        F.col("user_id").cast("string").alias("stock_symbol"),
-        F.col("ts").alias("local_time"),
-        F.col("value").alias("close"),
-        F.col("event_type"),
-    )
-    return enrich(candles)
+    return enrich(candles_from_events(spark, sf_dir, symbols))
 
 
 def _round6(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -140,7 +126,6 @@ def _round6(df: DataFrame, cols: list[str]) -> DataFrame:
 # Fixed parameters for the parameterized serving queries (see module doc).
 SYMBOL = "42"
 SYMBOLS = ["7", "23", "42", "99"]
-PIVOT_SYMBOLS = ["1", "2", "3", "4"]
 T_START = "2024-01-05 00:00:00"
 T_END = "2024-01-20 00:00:00"
 LOOKBACK = 10
@@ -192,17 +177,6 @@ def q_enrich_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "stock_symbol", "local_time", "close", *INDICATOR_COLS, "signal"
     )
     return _round6(out, INDICATOR_COLS)
-
-
-# RETIRED round 6 (registry capacity, per the round-5 verdict's
-# replacement-not-addition policy): the sma_5 / ema_10 / rsi_10 registry
-# rows were strict column-subsets of enrich_indicators — every indicator
-# column they proved (W1 sma min_periods gate, W2 recursive EMA fold,
-# W3-W6 delta/clip/gated means/guarded ratio/RSI) remains oracle-proven
-# by enrich_indicators' full-width row plus the per-column unit tests in
-# tests/test_indicators.py.  Likewise api_lowest was the min() mirror of
-# api_highest over the identical plan; the "lowest" API aggregation stays
-# covered by plans/api.py + tests/test_api.py / test_http_api.py.
 
 
 def q_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -270,14 +244,6 @@ def q_api_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.round(F.col("avg_rsi_10"), 6).alias("avg_rsi_10"))
 
 
-def q_api_highest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2: REST aggregate endpoint, max (views.py:37-47)."""
-    out = serving.aggregate_field(
-        _enriched(spark, sf_dir, [SYMBOL]), "highest", "close", SYMBOL, T_START, T_END
-    )
-    return out.select(F.round(F.col("highest_close"), 6).alias("highest_close"))
-
-
 _SUMMARY_OUT = [
     "avg_close", "max_close", "min_close",
     "avg_sma_5", "max_sma_5", "min_sma_5",
@@ -298,33 +264,6 @@ def q_summarize_multiple(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's per-symbol query loop (views.py:281-289)."""
     out = serving.summarize_multiple(_enriched(spark, sf_dir, SYMBOLS), SYMBOLS, T_START, T_END)
     return _round6(out, _SUMMARY_OUT)
-
-
-def q_global_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5: global close stats for one symbol (dashboard.json:689)."""
-    out = serving.global_stats(_enriched(spark, sf_dir, [SYMBOL]), SYMBOL)
-    return _round6(out, ["max_close", "avg_close", "min_close"])
-
-
-def q_pivot_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6: conditional-average pivot over symbols (dashboard.json:891,976)."""
-    out = serving.pivot_avg(_enriched(spark, sf_dir, PIVOT_SYMBOLS), PIVOT_SYMBOLS, ["gain", "loss"])
-    return _round6(out, list(out.columns))
-
-
-def q_candlestick_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P4/P6/O2: candlestick panel — time filter + positive-indicator guard
-    (dashboard.json:806)."""
-    out = serving.candlestick_feed(_enriched(spark, sf_dir, ["13"]), "13", T_START, T_END).select(
-        "stock_symbol", "local_time", "close", "sma_5", "ema_10"
-    )
-    return _round6(out, ["sma_5", "ema_10"])
-
-
-def q_latest_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W9/O3: current-signal stat — ORDER BY time DESC LIMIT 1
-    (dashboard.json:604), event_id tiebreak for tie determinism."""
-    return serving.latest_signal(_enriched(spark, sf_dir, ["7"]), "7", tiebreak_col="event_id")
 
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -376,12 +315,6 @@ _SUMMARY_SQL = """
   round(min(rsi_10), 6) AS min_rsi_10,
   round(max(gain), 6)   AS max_gain,   round(max(loss), 6)   AS max_loss
 """
-
-_PIVOT_SQL = ", ".join(
-    f"round(avg(CASE WHEN stock_symbol = '{s}' THEN {f} END), 6) AS avg_{f}_{s}"
-    for f in ["gain", "loss"]
-    for s in PIVOT_SYMBOLS
-)
 
 ORACLES: dict[str, str] = {
     "enrich_indicators": ENRICHED_CTE
@@ -436,10 +369,6 @@ ORACLES: dict[str, str] = {
     + f"""SELECT round(avg(rsi_10), 6) AS avg_rsi_10 FROM enriched
          WHERE stock_symbol = '{SYMBOL}'
            AND local_time >= TIMESTAMP '{T_START}' AND local_time <= TIMESTAMP '{T_END}'""",
-    "api_highest": ENRICHED_CTE
-    + f"""SELECT round(max(close), 6) AS highest_close FROM enriched
-         WHERE stock_symbol = '{SYMBOL}'
-           AND local_time >= TIMESTAMP '{T_START}' AND local_time <= TIMESTAMP '{T_END}'""",
     "summarize": ENRICHED_CTE
     + f"""SELECT {_SUMMARY_SQL} FROM enriched
          WHERE stock_symbol = '{SYMBOL}'
@@ -449,21 +378,6 @@ ORACLES: dict[str, str] = {
          WHERE stock_symbol IN ({", ".join(repr(s) for s in SYMBOLS)})
            AND local_time >= TIMESTAMP '{T_START}' AND local_time <= TIMESTAMP '{T_END}'
          GROUP BY stock_symbol""",
-    "global_stats": ENRICHED_CTE
-    + f"""SELECT round(max(close), 6) AS max_close, round(avg(close), 6) AS avg_close,
-                round(min(close), 6) AS min_close
-         FROM enriched WHERE stock_symbol = '{SYMBOL}'""",
-    "pivot_avg": ENRICHED_CTE + f"SELECT {_PIVOT_SQL} FROM enriched",
-    "candlestick_feed": ENRICHED_CTE
-    + f"""SELECT stock_symbol, local_time, close,
-                round(sma_5, 6) AS sma_5, round(ema_10, 6) AS ema_10
-         FROM enriched
-         WHERE stock_symbol = '13'
-           AND local_time >= TIMESTAMP '{T_START}' AND local_time <= TIMESTAMP '{T_END}'
-           AND sma_5 > 0 AND ema_10 > 0""",
-    "latest_signal": ENRICHED_CTE
-    + """SELECT stock_symbol, local_time, close, signal FROM enriched
-        WHERE stock_symbol = '7' ORDER BY local_time DESC, event_id DESC LIMIT 1""",
     "pricing_summary": """
         SELECT l_returnflag, l_linestatus,
                round(sum(l_quantity), 2)      AS sum_qty,
@@ -540,13 +454,8 @@ QUERIES: dict[str, QueryFn] = {
     "feature_windows": q_feature_windows,
     "minmax_scale": q_minmax_scale,
     "api_avg": q_api_avg,
-    "api_highest": q_api_highest,
     "summarize": q_summarize,
     "summarize_multiple": q_summarize_multiple,
-    "global_stats": q_global_stats,
-    "pivot_avg": q_pivot_avg,
-    "candlestick_feed": q_candlestick_feed,
-    "latest_signal": q_latest_signal,
     "pricing_summary": q_pricing_summary,
     "pricing_rollup": q_pricing_rollup,
     "shipping_priority": q_shipping_priority,
@@ -594,28 +503,6 @@ from big_data_engineering_financial_analysis_spark.plans import registry_ta as _
 QUERIES.update(_ta.QUERIES)
 ORACLES.update(_ta.ORACLES)
 
-#: RETIRED round 7: each retiree is a strict slice, count-projection or
-#: composition of a still-registered row, with a coverage test in
-#: tests/test_retired_r7.py.  The query functions and oracle SQL remain
-#: importable; only the registry rows are dropped.
-RETIRED_R7 = [
-    "rolling_corr", "lsh_bucket_histogram", "bpe_packing",
-    "corpus_funnel", "dedup_spans",
-]
-for _name in RETIRED_R7:
-    QUERIES.pop(_name, None)
-    ORACLES.pop(_name, None)
-
-#: RETIRED round 8, covered by tests/test_retired_r8.py: ``api_highest``
-#: is a 1-column projection of summarize's ``max_close`` (the REST
-#: "highest" endpoint stays covered by plans/api.py), and
-#: ``enrich_pandas`` was enrich_indicators' Arrow twin with the same
-#: oracle; its query and operator are since deleted.
-RETIRED_R8 = ["api_highest", "enrich_pandas"]
-for _name in RETIRED_R8:
-    QUERIES.pop(_name, None)
-    ORACLES.pop(_name, None)
-
 #: The paper's queries, by the SURVEY §3 entry point that serves them.
 #: They lead ``QUERIES``, so a correctness check over the first 50
 #: registered queries always covers them; the rest follow in
@@ -626,10 +513,7 @@ PAPER_QUERIES: dict[str, list[str]] = {
         "last_per_minute", "latest_per_key", "ilp_lines",
     ],
     "REST API (§3.2)": ["api_avg", "summarize", "summarize_multiple"],
-    "dashboard (§3.3)": [
-        "global_stats", "pivot_avg", "candlestick_feed", "latest_signal",
-        *dashboard.PANEL_SQL,
-    ],
+    "dashboard (§3.3)": [*dashboard.PANEL_SQL],
     "LSTM data prep (§3.4)": ["feature_windows", "minmax_scale", "lstm_dataset"],
 }
 _PAPER_ORDER = [name for names in PAPER_QUERIES.values() for name in names]

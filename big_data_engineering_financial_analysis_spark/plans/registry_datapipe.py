@@ -20,7 +20,6 @@ from big_data_engineering_financial_analysis_spark.sources.parquet import load_t
 QUERY_VEC_IDS = [0, 1, 2, 3, 4]
 EMB_DEDUP_THRESHOLD = 0.45
 JACCARD_THRESHOLD = 0.5
-N_PLANES = 8  # single-table bucket histogram
 N_TABLES = 4  # multi-table ANN
 PLANES_PER_TABLE = 4
 MAX_HAMMING = 2
@@ -231,48 +230,6 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-stage survivor counts of the corpus_prep gate chain — the
-    funnel report a corpus build publishes with every run (how many docs
-    each gate kept).  One unioned tree of single-row aggregates."""
-    from functools import reduce
-
-    docs = load_table(spark, sf_dir, "documents")
-    scrubbed = docs.filter(text.page_scrub_ok("text"))
-    scored = text.with_quality(text.with_lang_guess(scrubbed))
-    lang_ok = scored.filter(F.col("lang_guess") == "en")
-    qual_ok = lang_ok.filter(F.col("quality_score") >= QUALITY_FLOOR)
-    rep_ok = (
-        text.max_token_ratio_agg(docs)
-        .filter(F.col("max_token_ratio") <= REP_CAP)
-        .select("doc_id")
-    )
-    kept = qual_ok.join(rep_ok, "doc_id", "left_semi")
-    keepers = dedup.exact_dedup_groups(kept).select(
-        F.col("keeper_id").alias("doc_id")
-    )
-    surv = kept.join(keepers, "doc_id").persist()
-    pairs = dedup.minhash_lsh_dedup(surv, threshold=JACCARD_THRESHOLD)
-    near_dups = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    final = surv.join(near_dups, "doc_id", "left_anti")
-
-    def n(df: DataFrame, stage: str) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("n")).withColumn(
-            "stage", F.lit(stage)
-        )
-
-    stages = [
-        n(docs, "total"),
-        n(scrubbed, "scrub"),
-        n(lang_ok, "lang"),
-        n(qual_ok, "quality"),
-        n(kept, "repetition"),
-        n(surv, "exact_dedup"),
-        n(final, "near_dedup"),
-    ]
-    return reduce(DataFrame.unionByName, stages).select("stage", "n")
-
-
 #: repeated-span flagging window (Lee et al. use 50 tokens at web scale;
 #: 10 fits the 10-99-token synthetic docs while staying non-degenerate)
 DEDUP_SPAN_N = 10
@@ -290,18 +247,10 @@ def q_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.paragraph_dedup(structured)
 
 
-def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeated word-span flagging (the detection half of ExactSubstr
-    dedup): per-doc count of span positions whose 10-gram occurs more
-    than once corpus-wide."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.repeated_span_stats(docs, span_n=DEDUP_SPAN_N)
-
-
 def q_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr span REMOVAL (Lee et al. 2022): cut every non-first
     occurrence of a repeated 10-gram span and reassemble the surviving
-    words — the surgical counterpart of the ``dedup_spans`` detector."""
+    words — the surgical counterpart of ``dedup.repeated_span_stats``."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.span_removal(docs, span_n=DEDUP_SPAN_N)
 
@@ -442,31 +391,6 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size("pieces").cast("long").alias("n_pieces"),
         F.array_join("pieces", "|").alias("pieces_str"),
-    )
-
-
-def q_bpe_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing end-to-end FROM RAW TEXT: BPE-tokenize (subword
-    counts), then concat-then-chunk — the full raw-corpus -> training-
-    window pipeline in one plan (tokenizer row-local, one packing
-    shuffle on the shard key)."""
-    from big_data_engineering_financial_analysis_spark.operators.bpe import bpe_pieces
-    from big_data_engineering_financial_analysis_spark.operators.packing import pack_chunks
-
-    docs = load_table(spark, sf_dir, "documents").withColumn(
-        "bpe_n", F.size(bpe_pieces(F.col("text"))).cast("long")
-    )
-    return pack_chunks(docs, n_tokens_col="bpe_n")
-
-
-def q_lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    c = emb.select(F.col("vec_id"), F.col("embedding").cast("array<double>").alias("vec"))
-    planes = hyperplanes(N_PLANES, EMB_DIM)
-    return (
-        c.withColumn("bucket", similarity.lsh_bucket(F.col("vec"), planes))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
@@ -693,9 +617,6 @@ def _bucket_sql(planes: list[list[float]]) -> str:
         + " > 0 THEN '1' ELSE '0' END), '')"
     )
 
-
-_PLANES = hyperplanes(N_PLANES, EMB_DIM)
-_BUCKET_SQL = _bucket_sql(_PLANES)
 
 # multi-table ANN buckets: table t uses planes [t*p, (t+1)*p)
 _ANN_PLANES = hyperplanes(N_TABLES * PLANES_PER_TABLE, EMB_DIM)
@@ -966,22 +887,6 @@ ORACLES: dict[str, str] = {
                CAST(sum(keep) AS BIGINT) AS n_kept_paras,
                coalesce(array_to_string(list(para ORDER BY pos) FILTER (WHERE keep = 1), chr(10)), '') AS text_dedup
         FROM w GROUP BY doc_id
-    """,
-    # repeated spans: 60-bit span hashes, global occurrence counts
-    "dedup_spans": f"""
-        WITH t AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-        sh AS (
-          SELECT doc_id,
-                 unnest(list_transform(generate_series(1, len(t) - {DEDUP_SPAN_N - 1}),
-                   i -> array_to_string(t[i:i+{DEDUP_SPAN_N - 1}], ' '))) AS g
-          FROM t WHERE len(t) >= {DEDUP_SPAN_N}
-        ),
-        h AS (SELECT doc_id, ('0x' || substr(md5(g || '#span'), 1, 15))::BIGINT AS gh FROM sh),
-        dup AS (SELECT gh FROM (SELECT gh, count(*) AS n FROM h GROUP BY gh) WHERE n > 1)
-        SELECT doc_id,
-               CAST(count(*) AS BIGINT) AS n_spans,
-               CAST(sum(CASE WHEN gh IN (SELECT gh FROM dup) THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans
-        FROM h GROUP BY doc_id
     """,
     # ExactSubstr span removal: duplicated = non-first occurrence of a
     # >1-count span hash; a word is cut iff a dup span starts within the
@@ -1498,11 +1403,6 @@ ORACLES: dict[str, str] = {
         FROM scored
         QUALIFY rank <= {similarity.DEFAULT_K}
     """,
-    "lsh_bucket_histogram": f"""
-        SELECT {_BUCKET_SQL} AS bucket, count(*) AS n
-        FROM (SELECT embedding::DOUBLE[] AS vec FROM embeddings)
-        GROUP BY 1
-    """,
     "dedup_embedding": f"""
         WITH n AS (
           SELECT vec_id, vec, sqrt({_DOT.format(a="vec", b="vec")}) AS norm
@@ -1855,33 +1755,6 @@ ORACLES["bpe_tokenize"] = f"""
     FROM (SELECT doc_id, {_duck_bpe('text')} AS pieces FROM documents)
 """
 
-# packing oracle over BPE piece counts instead of whitespace tokens —
-# otherwise identical to seq_packing's
-ORACLES["bpe_packing"] = f"""
-    WITH base AS (
-      SELECT source AS shard, doc_id,
-             len({_duck_bpe('text')})::BIGINT AS n_tokens
-      FROM documents
-    ),
-    spans AS (
-      SELECT shard, doc_id, n_tokens,
-             sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)::BIGINT AS endpos,
-             (sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) - n_tokens)::BIGINT AS startpos
-      FROM base
-      QUALIFY n_tokens > 0
-    ),
-    exploded AS (
-      SELECT shard, doc_id, startpos, endpos,
-             unnest(generate_series(startpos // 256, (endpos - 1) // 256)) AS chunk_id
-      FROM spans
-    )
-    SELECT shard, chunk_id, doc_id,
-           greatest(chunk_id * 256 - startpos, 0) AS seg_start,
-           least((chunk_id + 1) * 256, endpos) - startpos
-             - greatest(chunk_id * 256 - startpos, 0) AS seg_len
-    FROM exploded
-"""
-
 # sliding_chunks twin: same tokenization, per-document (no cross-doc
 # stream), overlapping starts every `stride` tokens
 ORACLES["doc_chunks"] = """
@@ -1970,28 +1843,6 @@ ORACLES["corpus_prep"] = ORACLES["corpus_prep"].format(
     JT=JACCARD_THRESHOLD,
 )
 
-# The funnel oracle reuses corpus_prep's (already-formatted) CTE chain
-# verbatim and swaps only the final SELECT for per-stage counts, so the
-# two oracles can never drift apart stage-wise.
-_CP_FINAL_SELECT = (
-    "SELECT doc_id, lang_guess, quality_score\n"
-    "        FROM surv WHERE doc_id NOT IN (SELECT doc_id FROM drops)"
-)
-assert _CP_FINAL_SELECT in ORACLES["corpus_prep"], "corpus_prep tail changed"
-ORACLES["corpus_funnel"] = ORACLES["corpus_prep"].replace(
-    _CP_FINAL_SELECT,
-    f"""SELECT 'total' AS stage, count(*) AS n FROM documents
-        UNION ALL SELECT 'scrub', count(*) FROM sdocs
-        UNION ALL SELECT 'lang', count(*) FROM g WHERE lang_guess = 'en'
-        UNION ALL SELECT 'quality', count(*)
-          FROM g JOIN q ON g.doc_id = q.doc_id
-          WHERE g.lang_guess = 'en' AND q.quality_score >= {QUALITY_FLOOR}
-        UNION ALL SELECT 'repetition', count(*) FROM kept
-        UNION ALL SELECT 'exact_dedup', count(*) FROM surv
-        UNION ALL SELECT 'near_dedup', count(*)
-          FROM surv WHERE doc_id NOT IN (SELECT doc_id FROM drops)""",
-)
-
 def q_weighted_sample(spark, sf_dir):
     """Quality-weighted importance sampling over documents: keep each doc
     with probability = its (rounded) quality score, via an exact keyed-
@@ -2047,7 +1898,6 @@ QUERIES = {
     "corpus_scrub": q_corpus_scrub,
     "quality_score": q_quality_score,
     "dedup_paragraph": q_dedup_paragraph,
-    "dedup_spans": q_dedup_spans,
     "dedup_span_removal": q_dedup_span_removal,
     "dedup_span_removal_max": q_dedup_span_removal_max,
     "dedup_incremental": q_dedup_incremental,
@@ -2056,11 +1906,9 @@ QUERIES = {
     "seq_packing": q_seq_packing,
     "doc_chunks": q_doc_chunks,
     "bpe_tokenize": q_bpe_tokenize,
-    "bpe_packing": q_bpe_packing,
     "downsample_lang": q_downsample_lang,
     "decontaminate": q_decontaminate,
     "emb_project": q_emb_project,
-    "corpus_funnel": q_corpus_funnel,
     "lang_id": q_lang_id,
     "doc_fingerprints": q_doc_fingerprints,
     "winnow_fingerprints": q_winnow_fingerprints,
@@ -2077,7 +1925,6 @@ QUERIES = {
     "ann_pq": q_ann_pq,
     "ann_ivf_pq": q_ann_ivf_pq,
     "ann_pq_rerank": q_ann_pq_rerank,
-    "lsh_bucket_histogram": q_lsh_bucket_histogram,
     "dedup_embedding": q_dedup_embedding,
 }
 

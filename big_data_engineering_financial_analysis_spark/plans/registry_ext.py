@@ -403,30 +403,10 @@ def q_lstm_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate aggregates (HLL distinct + quantile sketch) — genuinely
-    non-SQL-oracle-checkable (sketch results are engine-specific).  NOT in
-    the driver registry (a no-oracle row reads as red); the registered,
-    hash-checked companion is :func:`q_exact_distinct`, and the sketch's
-    accuracy against it is pytest-proven (tests/test_entry.py).  At 100 TB
-    these replace their exact counterparts (value_percentiles,
-    countDistinct) wherever tolerance allows: HLL is one pass with a
-    fixed-size sketch per group versus count_distinct's expanded
-    (group, user) shuffle."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id").alias("approx_users"),
-        F.percentile_approx("value", 0.5).alias("approx_p50"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
 def q_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact twin of :func:`q_approx_distinct`: count_distinct + exact
-    interpolated median per group — deterministic, hash-checked against
-    DuckDB.  The sketch variant trades these exact shuffles for one-pass
-    fixed-size state; registering the exact twin keeps the correctness
-    gate green while the approx path is accuracy-tested in pytest."""
+    """Distinct users and exact interpolated median per event type:
+    count_distinct + percentile, deterministic, hash-checked against
+    DuckDB."""
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("n_users"),
@@ -804,8 +784,6 @@ ORACLES: dict[str, str] = {
                min(value) AS min_value, max(value) AS max_value
         FROM events GROUP BY event_type
     """,
-    # NOTE: q_approx_distinct intentionally has no oracle (sketch-based) and
-    # is NOT registered; exact_distinct is its hash-checked registry twin.
     "exact_distinct": """
         SELECT event_type,
                count(DISTINCT user_id) AS n_users,

@@ -105,31 +105,13 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ix.ohlc_bars(_candles(spark, sf_dir))
 
 
-#: Fixed symbol pair for the rolling-correlation query.
-CORR_X, CORR_Y = 7, 42
-
-
-def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # daily bars: the tick streams are sparse (~2 ticks/symbol/day at
-    # sf0.01), so finer buckets share no common timestamps to correlate
-    bars = ix.ohlc_bars(
-        _candles(spark, sf_dir, symbols=[CORR_X, CORR_Y]),
-        volume_col=None,
-        bar="day",
-    )
-    bx = bars.filter(F.col("stock_symbol") == str(CORR_X))
-    by = bars.filter(F.col("stock_symbol") == str(CORR_Y))
-    out = ix.rolling_corr(bx, by, window=10)
-    return out.select("bucket", "x", "y", F.round("corr", 6).alias("corr"))
-
-
 #: Symbol universe for the correlation-matrix query (15 pairs).
 CORR_PAIR_SYMBOLS = [3, 7, 11, 23, 42, 57]
 
 
 def q_rolling_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs rolling correlation — the correlation-matrix shape.
-    Unlike the single-pair ``rolling_corr`` (global window by contract),
+    Unlike the single-pair ``ix.rolling_corr`` (global window by contract),
     every window here is PARTITIONED BY (sym_x, sym_y), so pairs
     parallelize across reducers."""
     bars = ix.ohlc_bars(
@@ -249,7 +231,6 @@ QUERIES = {
     "anomaly_zscore": q_anomaly_zscore,
     "robust_anomaly": q_robust_anomaly,
     "ohlc_bars": q_ohlc_bars,
-    "rolling_corr": q_rolling_corr,
     "rolling_corr_pairs": q_rolling_corr_pairs,
     "bollinger_20": q_bollinger,
     "stochastic_14": q_stochastic,
@@ -354,31 +335,6 @@ WINDOW wp AS (PARTITION BY stock_symbol ORDER BY close),
     + """
 SELECT stock_symbol, bucket, open, high, low, close, n_ticks, volume
 FROM bars
-""",
-    "rolling_corr": _CANDLES_CTE.replace(
-        "FROM events", "FROM events WHERE user_id IN (7, 42)"
-    )
-    + _OHLC_CTE.replace("date_trunc('minute'", "date_trunc('day'")
-    + """,
-j AS (
-  SELECT a.bucket, a.close AS x, b.close AS y
-  FROM bars a JOIN bars b USING (bucket)
-  WHERE a.stock_symbol = '7' AND b.stock_symbol = '42'
-),
-c AS (
-  SELECT bucket, x, y,
-    count(x) OVER w AS n, sum(x) OVER w AS sx, sum(y) OVER w AS sy,
-    sum(x * x) OVER w AS sxx, sum(y * y) OVER w AS syy,
-    sum(x * y) OVER w AS sxy
-  FROM j
-  WINDOW w AS (ORDER BY bucket ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-)
-SELECT bucket, x, y,
-  round(CASE WHEN n >= 10 THEN
-    (n * sxy - sx * sy)
-      / nullif(sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy), 0)
-  END, 6) AS corr
-FROM c
 """,
     "rolling_corr_pairs": _CANDLES_CTE.replace(
         "FROM events", "FROM events WHERE user_id IN (3, 7, 11, 23, 42, 57)"

@@ -1,21 +1,17 @@
-"""Serving-side query set (SURVEY §2.5, §2.3, §2.7).
+"""REST aggregates over the enriched table (SURVEY §2.3, §2.5, §3.2).
 
-Re-expresses the reference's two query consumers as Catalyst plans over the
-enriched table:
-
-* the Django REST aggregation API — ``avg|highest|lowest`` of any enriched
-  column over a trailing time window per symbol
-  (services/aggregator_django/aggregator/views.py:25-86), the 14-aggregate
-  summary (:61-86), and the multi-symbol variant which the reference runs as
-  a client-side loop issuing one SQL query per symbol (:281-289) and we run
-  as a single grouped aggregate;
-* the 8 Grafana dashboard SQLs (grafana/dashboards/dashboard.json:132-976):
-  time-series selects, gain/loss feeds, latest-signal stat, global close
-  stats, candlestick feed, and conditional-average pivots.
+Re-expresses the reference's Django REST aggregation API
+(services/aggregator_django/aggregator/views.py) as Catalyst plans:
+``avg|highest|lowest`` of any enriched column over a symbol + time window
+(:25-86), the 14-aggregate summary (:61-86), and the multi-symbol variant
+which the reference runs as a client-side loop issuing one SQL query per
+symbol (:281-289) and we run as a single grouped aggregate.
+``plans/api.py`` validates requests and calls these.
 
 All of these are filter + hash-aggregate shapes: predicate pushdown prunes
 the scan to the symbol/time range, partial aggregation runs map-side, and
-the shuffle carries one row per group.
+the shuffle carries one row per group.  The dashboard's panels are raw SQL
+and live in ``plans/dashboard.py``.
 """
 
 from __future__ import annotations
@@ -117,73 +113,4 @@ def summarize_multiple(
         .filter(F.col(symbol_col).isin(symbols))
         .groupBy(symbol_col)
         .agg(*_summary_aggs())
-    )
-
-
-def global_stats(df: DataFrame, symbol: str, symbol_col: str = "stock_symbol") -> DataFrame:
-    """A5: ``SELECT max(close), avg(close), min(close) WHERE symbol=...``
-    (dashboard.json:689)."""
-    return df.filter(F.col(symbol_col) == symbol).agg(
-        F.max("close").alias("max_close"),
-        F.avg("close").alias("avg_close"),
-        F.min("close").alias("min_close"),
-    )
-
-
-def pivot_avg(
-    df: DataFrame,
-    symbols: list[str],
-    fields: list[str],
-    symbol_col: str = "stock_symbol",
-) -> DataFrame:
-    """A6: conditional-average pivot (dashboard.json:891,976).
-
-    ``AVG(CASE WHEN symbol = s THEN field END) AS avg_field_s`` for every
-    (field, symbol) pair — one row out, map-side partial aggregation, no
-    per-symbol rescan.
-    """
-    aggs = [
-        F.avg(F.when(F.col(symbol_col) == s, F.col(f))).alias(f"avg_{f}_{s}")
-        for f in fields
-        for s in symbols
-    ]
-    return df.agg(*aggs)
-
-
-def candlestick_feed(
-    df: DataFrame,
-    symbol: str,
-    start=None,
-    end=None,
-    time_col: str = "local_time",
-    symbol_col: str = "stock_symbol",
-) -> DataFrame:
-    """Candlestick panel feed (dashboard.json:806): time filter + numeric
-    guards ``sma_5 > 0 AND ema_10 > 0``, ordered by time (O2/P6)."""
-    return (
-        _window_filter(df, symbol, time_col, start, end, symbol_col)
-        .filter((F.col("sma_5") > 0) & (F.col("ema_10") > 0))
-        .orderBy(time_col)
-    )
-
-
-def latest_signal(
-    df: DataFrame,
-    symbol: str,
-    time_col: str = "local_time",
-    symbol_col: str = "stock_symbol",
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """W9/O3: current-signal stat panel (dashboard.json:604) —
-    ``ORDER BY local_time DESC LIMIT 1`` planned as TakeOrderedAndProject
-    (no global sort; each partition contributes its top row).  Pass a
-    unique ``tiebreak_col`` to make the pick deterministic on time ties."""
-    order = [F.col(time_col).desc()]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col).desc())
-    return (
-        df.filter(F.col(symbol_col) == symbol)
-        .orderBy(*order)
-        .limit(1)
-        .select(symbol_col, time_col, "close", "signal")
     )

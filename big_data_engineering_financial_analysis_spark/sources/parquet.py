@@ -110,15 +110,25 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Mapping[str, DataFrame]:
     return _LazyTables(spark, sf_dir)
 
 
-def candles_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def candles_from_events(
+    spark: SparkSession, sf_dir: str, symbols: list[str] | None = None
+) -> DataFrame:
     """Map the synthetic ``events`` table onto the candle-stream shape.
 
     FIXTURES.md assigns ``user_id`` -> symbol key, ``ts`` -> local_time,
     ``value`` -> close, which makes every reference window operator (W1-W9)
     testable against a SQL oracle.  Column names keep the candle vocabulary
     so downstream operators read naturally.
+
+    ``symbols`` prunes to a symbol set on the native int ``user_id``
+    BEFORE the string mapping: a filter on ``CAST(user_id AS STRING)``
+    cannot be pushed into the parquet scan (the cast blocks source
+    filters), whereas ``user_id IN (...)`` reaches PushedFilters.
     """
-    return load_table(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events")
+    if symbols is not None:
+        ev = ev.filter(F.col("user_id").isin([int(s) for s in symbols]))
+    return ev.select(
         F.col("event_id"),
         F.col("user_id").cast("string").alias("stock_symbol"),
         F.col("ts").alias("local_time"),

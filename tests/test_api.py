@@ -51,6 +51,15 @@ def test_validation_errors(enriched):
         api.handle_aggregate(
             enriched, {"aggregation": "avg", "stock_symbol": "X", "period_minutes": -5}, NOW
         )
+    with pytest.raises(api.ValidationError):
+        api.handle_aggregate(
+            enriched, {"aggregation": "avg", "stock_symbol": "X", "period_minutes": True}, NOW
+        )
+    for symbol in (["a"], {"a": 1}):
+        with pytest.raises(api.ValidationError):
+            api.handle_aggregate(enriched, {"aggregation": "avg", "stock_symbol": symbol}, NOW)
+    with pytest.raises(api.ValidationError):
+        api.handle_summarize_multiple(enriched, {"stock_symbols": ["BTCIRT", {}]}, NOW)
 
 
 def test_summarize_has_14_aggregates(enriched):

@@ -578,6 +578,32 @@ def test_span_removal_short_docs_untouched(spark):
     assert out[1]["text_dedup"] == "p q" and out[2]["text_dedup"] == "p q"
 
 
+def test_dedup_spans_detection_consistent_with_removal(spark):
+    """The detection half (repeated_span_stats) must agree with the
+    removal form on the sf0.01 corpus: every document that LOSES words in
+    span_removal reports duplicated spans, and a document reporting zero
+    duplicated spans loses nothing."""
+    from big_data_engineering_financial_analysis_spark.plans.registry_datapipe import (
+        DEDUP_SPAN_N,
+    )
+    from tests.conftest import SF_MEDIUM
+
+    docs = spark.read.parquet(f"{SF_MEDIUM}/documents.parquet")
+    stats = {
+        r["doc_id"]: r["n_dup_spans"]
+        for r in dedup.repeated_span_stats(docs, span_n=DEDUP_SPAN_N).collect()
+    }
+    removal = {
+        r["doc_id"]: r["n_words"] - r["n_kept_words"]
+        for r in dedup.span_removal(docs, span_n=DEDUP_SPAN_N).collect()
+    }
+    lost = {d for d, w in removal.items() if w > 0}
+    assert lost, "fixture has duplicated spans"
+    assert all(stats.get(d, 0) > 0 for d in lost)
+    clean = {d for d, n in stats.items() if n == 0}
+    assert all(removal.get(d, 0) == 0 for d in clean)
+
+
 @pytest.mark.parametrize("threshold", [0, dedup.TINY_GRAPH_EDGES])
 def test_merge_component_labels_equals_full_recompute(spark, threshold):
     """Incremental cluster maintenance invariance: folding pair batches

@@ -26,29 +26,6 @@ def test_queries_run_at_sf0001(spark):
         df.limit(1).collect()  # schema + execution smoke
 
 
-def test_approx_distinct_tracks_exact_twin(spark):
-    """The sketch query (not registry-registered: engine-specific values)
-    must track its hash-checked exact twin within HLL/KLL tolerance."""
-    from big_data_engineering_financial_analysis_spark.plans.registry_ext import (
-        q_approx_distinct,
-        q_exact_distinct,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    approx = {r.event_type: r for r in q_approx_distinct(spark, sf).collect()}
-    exact = {r.event_type: r for r in q_exact_distinct(spark, sf).collect()}
-    assert set(approx) == set(exact)
-    for et, ex in exact.items():
-        ap = approx[et]
-        assert ap.n == ex.n  # row counts are exact in both
-        # approx_count_distinct default rsd = 5%; allow 3 sigma
-        assert abs(ap.approx_users - ex.n_users) <= max(3, 0.15 * ex.n_users)
-        # percentile_approx returns a real order statistic near rank n/2;
-        # the exact p50 interpolates between the two middle ones — at this
-        # data shape (value ~ U[0,1000]) they sit within a few percent
-        assert abs(ap.approx_p50 - ex.p50) <= 0.1 * max(abs(ex.p50), 1.0)
-
-
 def test_cli_list_and_unknown():
     from big_data_engineering_financial_analysis_spark.__main__ import main
 

@@ -15,6 +15,9 @@ the list.
 A cut must not break the package's importers outside it either: every
 package module and name that the benchmark, the tools, ``bench.py`` or
 ``__spark_entry__.py`` imports must import and resolve.
+
+The same holds one level down, for the query registry: a ``q_*``
+function that no registry row holds is a query nothing runs.
 """
 
 from __future__ import annotations
@@ -152,3 +155,17 @@ def test_imports_from_outside_the_package_resolve():
         except ImportError as exc:
             broken.append(f"{path.relative_to(ROOT)}: {module} {name or ''}: {exc}")
     assert not broken, "\n".join(broken)
+
+
+def test_every_registry_query_function_is_registered():
+    from big_data_engineering_financial_analysis_spark.plans.registry import QUERIES
+
+    registered = set(QUERIES.values())
+    orphans = []
+    for path in sorted((ROOT / PKG / "plans").glob("registry*.py")):
+        module = importlib.import_module(f"{PKG}.plans.{path.stem}")
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.FunctionDef) and node.name.startswith("q_"):
+                if getattr(module, node.name) not in registered:
+                    orphans.append(f"{path.stem}.{node.name}")
+    assert not orphans, f"query functions no registry row holds: {orphans}"
