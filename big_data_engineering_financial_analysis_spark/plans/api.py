@@ -28,6 +28,11 @@ from big_data_engineering_financial_analysis_spark.schemas import API_FIELD_WHIT
 
 AGGREGATIONS = tuple(serving.AGGREGATIONS)
 
+#: the longest trailing window, a thousand 365-day years: ``now - period``
+#: stays inside ``datetime``'s range for any ``now`` after year 1000, where
+#: a larger period could overflow ``trailing_window``
+MAX_PERIOD_MINUTES = 1000 * 365 * 24 * 60
+
 
 class ValidationError(ValueError):
     """Request rejected — mirrors the serializer 400s (serializers.py:15-31)."""
@@ -47,8 +52,8 @@ def _validate(request: dict, enriched_cols: list[str]) -> dict:
         raise ValidationError(f"field must be one of {sorted(whitelist)}")
     period = request.get("period_minutes", 60)
     # bool is an int subclass: reject ``true`` before the int check
-    if isinstance(period, bool) or not isinstance(period, int) or period <= 0:
-        raise ValidationError("period_minutes must be a positive int")
+    if isinstance(period, bool) or not isinstance(period, int) or not 0 < period <= MAX_PERIOD_MINUTES:
+        raise ValidationError(f"period_minutes must be an int in 1..{MAX_PERIOD_MINUTES}")
     if not _is_symbol(request.get("stock_symbol")):
         raise ValidationError("stock_symbol must be a non-empty string")
     return {"aggregation": agg, "field": field, "period_minutes": period,

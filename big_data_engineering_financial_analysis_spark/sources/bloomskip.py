@@ -588,7 +588,7 @@ def _append_summary_journal(path: str, updates: dict) -> None:
     The monolithic summary is O(ALL leaves × cols) bytes, so the
     dirs-bounded per-batch refresh rewriting it wholesale was linear
     in TOTAL leaf count (measured 0.22 s @1k leaves, 0.85 s @4k for a
-    ONE-leaf touch — tools/summary_maintenance_probe.py): the journal
+    ONE-leaf touch by the former tools/summary_maintenance_probe.py): the journal
     makes that write O(touched).  Readers overlay later lines over the
     (cached) base parse; a torn tail line from a crash is skipped, and
     the affected leaf's base entry then fails its seals against the

@@ -5,7 +5,7 @@ The in-memory incremental kernel
 (``operators/dedup.incremental_minhash_dedup``) re-bands the ENTIRE
 signature store every micro-batch: a row-local explode + string concat
 over every ever-arrived signature (~2.7 µs/store-doc measured by
-``tools/incremental_dedup_probe.py``) that grows linearly with history
+the former ``tools/incremental_dedup_probe.py``) that grows linearly with history
 and dominates the per-batch wall once the store dwarfs the batch.  This
 module persists the store in ALREADY-BANDED form so that term runs once
 per document ever, not once per document per batch:
@@ -42,7 +42,7 @@ Per-batch store cost at rest (base compacted, filters cached):
 
 So the store-size-dependent term is the probe CPU (microseconds per
 file) and the true-match IO — sublinear in history, measured by
-``tools/bandstore_probe.py``.  Driver memory for the cached filters is
+the former ``tools/bandstore_probe.py``.  Driver memory for the cached filters is
 ``BLOOM_BITS/8`` per base file (bits ∝ rows is the Bloom lower bound;
 ~256 KB per 128k-row file ⇒ ~2 MB per million store docs).
 

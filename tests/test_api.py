@@ -51,10 +51,11 @@ def test_validation_errors(enriched):
         api.handle_aggregate(
             enriched, {"aggregation": "avg", "stock_symbol": "X", "period_minutes": -5}, NOW
         )
-    with pytest.raises(api.ValidationError):
-        api.handle_aggregate(
-            enriched, {"aggregation": "avg", "stock_symbol": "X", "period_minutes": True}, NOW
-        )
+    for period in (True, 10**12):
+        with pytest.raises(api.ValidationError):
+            api.handle_aggregate(
+                enriched, {"aggregation": "avg", "stock_symbol": "X", "period_minutes": period}, NOW
+            )
     for symbol in (["a"], {"a": 1}):
         with pytest.raises(api.ValidationError):
             api.handle_aggregate(enriched, {"aggregation": "avg", "stock_symbol": symbol}, NOW)

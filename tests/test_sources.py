@@ -96,23 +96,30 @@ def test_pipeline_cli_batch(spark, tmp_path, capsys):
     assert "dt" in stored.columns and stored.count() > 0
 
 
+def _wire_candles(spark, rows):
+    """Kafka-wire candles parsed as the stream parses them; ``rows`` are
+    ``(symbol, local_time, close)``."""
+    from big_data_engineering_financial_analysis_spark.sources.kafka import parse_candle_json
+
+    wire = [
+        (json.dumps({"stock_symbol": s, "local_time": t, "open": c, "high": c, "low": c,
+                     "close": c, "volume": 1.0}),)
+        for s, t, c in rows
+    ]
+    return parse_candle_json(spark.createDataFrame(wire, "value string"))
+
+
 def test_pipeline_batch_over_kafka_parsed_candles(spark):
     """Candles off the Kafka wire carry no ``event_id``; every panel runs
     over their enrichment, and the latest-signal panel resolves a time tie
     on the columns it selects."""
     from big_data_engineering_financial_analysis_spark.pipeline import run_batch
     from big_data_engineering_financial_analysis_spark.plans import dashboard
-    from big_data_engineering_financial_analysis_spark.sources.kafka import parse_candle_json
 
-    def candle(symbol, minute, close):
-        return json.dumps(
-            {"stock_symbol": symbol, "local_time": f"2024-01-10 00:{minute:02d}:00",
-             "open": close, "high": close, "low": close, "close": close, "volume": 1.0}
-        )
-
-    wire = [candle(s, m, 100.0 + m % 4) for s in ["1", "2", "3", "4", "42"] for m in range(15)]
-    wire.append(candle("42", 14, 50.0))  # a second candle in the last minute
-    candles = parse_candle_json(spark.createDataFrame([(w,) for w in wire], "value string"))
+    rows = [(s, f"2024-01-10 00:{m:02d}:00", 100.0 + m % 4)
+            for s in ["1", "2", "3", "4", "42"] for m in range(15)]
+    rows.append(("42", "2024-01-10 00:14:00", 50.0))  # a second candle in the last minute
+    candles = _wire_candles(spark, rows)
     assert "event_id" not in candles.columns
 
     counts = run_batch(spark, candles=candles)
@@ -127,6 +134,27 @@ def test_pipeline_batch_over_kafka_parsed_candles(spark):
     ).collect()
     assert len(tied) == 2
     assert [(r.local_time.minute, r.signal) for r in latest] == [(14, max(r.signal for r in tied))]
+
+
+def test_pipeline_batch_panel_subset_in_order(spark):
+    """``run_batch(panels=...)`` answers the named panels in that order, each
+    with the count its SQL gives on its own; a row-returning panel may
+    count 0 while the pivots still return their one row."""
+    from big_data_engineering_financial_analysis_spark.pipeline import run_batch
+    from big_data_engineering_financial_analysis_spark.plans import dashboard
+
+    # '42' only after the panels' fixed 2024-01-05..20 window
+    rows = [(s, f"2024-01-10 00:{m:02d}:00", 100.0 + m % 4) for s in ["1", "2", "3", "4"] for m in range(15)]
+    rows += [("42", f"2024-02-01 00:{m:02d}:00", 100.0 + m % 3) for m in range(15)]
+    panels = ["panel_avg_loss_pivot", "panel_candlestick", "panel_price_series",
+              "panel_indicator_series", "panel_close_stats", "panel_avg_gain_pivot"]
+
+    counts = run_batch(spark, candles=_wire_candles(spark, rows), panels=panels)
+    assert list(counts) == panels
+    assert counts == {p: spark.sql(dashboard.PANEL_SQL[p]).count() for p in panels}
+    assert counts["panel_candlestick"] == counts["panel_indicator_series"] == 0
+    assert counts["panel_price_series"] == 15
+    assert counts["panel_avg_gain_pivot"] == counts["panel_avg_loss_pivot"] == counts["panel_close_stats"] == 1
 
 
 # ---------------------------------------------------------------------------
