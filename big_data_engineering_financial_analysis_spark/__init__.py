@@ -24,6 +24,8 @@ Layout
 - ``sources``     Batch/stream source + sink builders (parquet, kafka, rest).
 - ``streaming``   Structured Streaming pipeline: stateful incremental
                   indicators, watermarked dedup, checkpointing.
+- ``localfs/``    Java sources and jar of the fork-free ``file:`` file
+                  system that ``session`` registers.
 """
 
 __version__ = "0.1.0"

@@ -33,12 +33,29 @@ chosen to survive that scale-up:
   session puts the package's root on the workers' ``PYTHONPATH``; without
   it every Python task of a Spark driver started outside the checkout
   would fail.
+- The ``file:`` file system is ``localfs/``'s fork-free copy of Hadoop's
+  local one.  Without the native ``libhadoop`` (Spark's distribution has
+  none; the JVM logs "Unable to load native-hadoop library"), Hadoop's
+  local file system forks ``chmod`` for every file it creates and for its
+  ``.crc``, and ``readlink`` two or more times for every ``FileContext``
+  rename: about 110 process starts per ``stream_live`` micro-batch, from
+  the state store's delta files and the offset, commit and source logs.
+  The copy makes the same calls through ``java.nio`` and writes the same
+  files, checksums and modes.  On a 4-core host it cut a traced
+  ``stream_live`` run's ``state.commit_ms`` from 724 to 46 ms and
+  ``stream.commit_ms`` from 72 to 4 ms, and the lag p50 median over ten
+  seeds from 1,053 to 670 ms.  It is registered only on a JVM that this
+  builder launches with the jar on its class path, or one that already
+  has it: a JVM that a vanilla session or ``spark-submit`` started keeps
+  Hadoop's.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "bdefa-spark"
@@ -46,6 +63,31 @@ DEFAULT_APP_NAME = "bdefa-spark"
 
 #: Cap of the RAM-derived default driver heap.
 MAX_DEFAULT_DRIVER_MB = 48 * 1024
+
+
+#: The fork-free ``file:`` file system, built from ``localfs/src`` by
+#: ``tools/build_localfs_jar.py``.
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "localfs", "localfs.jar")
+LOCALFS_CONF = {
+    "spark.hadoop.fs.file.impl": "bdefa.localfs.NoForkLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "bdefa.localfs.NoForkLocalFs",
+}
+
+
+def _jvm_loads_localfs() -> bool:
+    """Whether the driver JVM that the builder will use can load the
+    fork-free file system: true for a JVM it launches, which gets the jar
+    on its class path, and asked of one already running."""
+    if SparkContext._gateway is None:
+        if "PYSPARK_GATEWAY_PORT" not in os.environ:
+            return True
+        SparkContext._ensure_initialized()  # connect to the JVM that launched this process
+    jvm = SparkContext._jvm
+    try:
+        jvm.java.lang.Class.forName(LOCALFS_CONF["spark.hadoop.fs.file.impl"], False, jvm.java.lang.ClassLoader.getSystemClassLoader())
+    except Py4JError:
+        return False
+    return True
 
 
 def _local_cpus() -> int:
@@ -106,7 +148,11 @@ def get_spark(
         # the dominant at-rest access pattern for this engine
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if _jvm_loads_localfs():
+        conf = {**LOCALFS_CONF, **conf}
+        conf["spark.driver.extraClassPath"] = os.pathsep.join(filter(None, [conf.get("spark.driver.extraClassPath"), LOCALFS_JAR]))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
